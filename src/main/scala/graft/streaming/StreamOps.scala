@@ -3,7 +3,6 @@ package graft.streaming
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
-import org.apache.spark.sql.types._
 
 /** Structured Streaming variants of the event-analytics operators.
   *
@@ -62,31 +61,17 @@ object StreamOps {
     spark.readStream.format("socket")
       .option("host", host).option("port", port).load()
 
-  /** events schema with ts read as the given type (TIMESTAMP(NANOS)
-    * vintage -> long; TIMESTAMP(MICROS) vintage -> native NTZ).
-    */
-  def rawSchema(tsType: org.apache.spark.sql.types.DataType): StructType = StructType(Seq(
-    StructField("event_id", LongType),
-    StructField("ts", tsType),
-    StructField("user_id", LongType),
-    StructField("event_type", StringType),
-    StructField("value", DoubleType),
-    StructField("props", StringType)))
-
   /** Streaming read of the events table, normalized to session-UTC
-    * TimestampType like Tables.events. The stored ts type has shipped
-    * as both TIMESTAMP(NANOS) and TIMESTAMP(MICROS); a streaming read
-    * needs the schema up front, so peek at the batch footer once
-    * (metadata-only, no data scan) and adapt.
+    * TimestampType like Tables.events. A streaming read needs the schema
+    * up front: it takes the stored schema and the ts fix-up from
+    * Tables, which decides the stored vintage in one place.
     */
   def readEvents(spark: SparkSession, dir: String): DataFrame = {
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    val storedTs = spark.read.parquet(s"$dir/events.parquet").schema("ts").dataType
-    val raw = spark.readStream
-      .schema(rawSchema(storedTs))
+    val stored = graft.Tables.eventsStored(spark, dir).schema
+    spark.readStream
+      .schema(stored)
       .parquet(s"$dir/events*") // glob: the file source requires a dir/glob, not a bare file
-    if (storedTs == LongType) raw.withColumn("ts", expr("timestamp_micros(ts div 1000)"))
-    else raw.withColumn("ts", col("ts").cast("timestamp"))
+      .withColumn("ts", graft.Tables.eventsTs(stored("ts").dataType))
   }
 
   /** Tumbling 1-hour event-time windows with a 2-hour watermark. The
@@ -184,12 +169,6 @@ object StreamOps {
       .select(col("window.start").as("window_start"), col("event_type"),
         col("kmv.est_distinct").as("est_users"), col("n_events"))
 
-  /** documents schema as stored. */
-  val docsSchema: StructType = StructType(Seq(
-    StructField("doc_id", LongType), StructField("text", StringType),
-    StructField("lang", StringType), StructField("source", StringType),
-    StructField("n_chars", LongType)))
-
   /** Streaming corpus front door: quality-score each arriving document
     * and tag its lane (keep / low_quality / quarantine) as it lands.
     * Stateless narrow per-row logic — no watermark, no state store;
@@ -198,7 +177,7 @@ object StreamOps {
     * `lane` (the m05 pattern, incremental).
     */
   def qualityGate(spark: SparkSession, dir: String): DataFrame =
-    spark.readStream.schema(docsSchema).parquet(s"$dir/documents*")
+    spark.readStream.schema(graft.Tables.schemas("documents")).parquet(s"$dir/documents*")
       .withColumn("byte_len", length(encode(col("text"), "UTF-8")).cast("long"))
       .withColumn("n_words", size(split(trim(col("text")), " ")).cast("long"))
       .withColumn("quality",
@@ -240,12 +219,8 @@ object StreamOps {
     */
   def incrementalIngest(spark: SparkSession, srcDir: String, outDir: String,
                         checkpointDir: String): org.apache.spark.sql.streaming.StreamingQuery = {
-    val docSchema = StructType(Seq(
-      StructField("doc_id", LongType), StructField("text", StringType),
-      StructField("lang", StringType), StructField("source", StringType),
-      StructField("n_chars", LongType)))
     spark.readStream
-      .schema(docSchema)
+      .schema(graft.Tables.schemas("documents"))
       .parquet(s"$srcDir/*")
       .withColumn("n_words", size(split(col("text"), " ")).cast("long"))
       .select("doc_id", "lang", "n_chars", "n_words")
@@ -610,7 +585,7 @@ object StreamOps {
                          bands: Int = 16): Dataset[NearDupPair] = {
     import spark.implicits._
     val r = numHashes / bands
-    val banded = spark.readStream.schema(docsSchema).parquet(s"$dir/documents*")
+    val banded = spark.readStream.schema(graft.Tables.schemas("documents")).parquet(s"$dir/documents*")
       .select(col("doc_id"),
         graft.functions.minhash_signature(col("text"), numHashes, 3).as("sig"),
         expr("""array_sort(array_distinct(transform(

@@ -49,6 +49,23 @@ class SurveyConsistencySpec extends AnyFunSuite {
     assert(orphans.isEmpty, s"oracles without queries: $orphans")
   }
 
+  test("README's entry and operator counts match SparkEntry.queries") {
+    val src = Source.fromFile("README.md", "UTF-8")
+    val readme = try src.mkString finally src.close()
+    val entries = """`SparkEntry\.queries` \((\d+) entries, all of them\s+oracle-checked\)""".r
+      .findFirstMatchIn(readme).map(_.group(1).toInt)
+    assert(entries.contains(SparkEntry.queries.size),
+      s"README says ${entries.getOrElse("?")} entries, all oracle-checked; " +
+        s"SparkEntry.queries has ${SparkEntry.queries.size}")
+    assert(SparkEntry.oracleSql.keySet == SparkEntry.queries.keySet,
+      "README says every entry is oracle-checked, but some have no oracle")
+    val operators = """\((\d+) operators, ALL oracle-checked""".r
+      .findFirstMatchIn(readme).map(_.group(1).toInt)
+    assert(operators.contains(SparkEntry.queries.size),
+      s"README's layout says ${operators.getOrElse("?")} operators; " +
+        s"SparkEntry.queries has ${SparkEntry.queries.size}")
+  }
+
   // ---- sources-section pinning (round-7 lesson: prose drift about the
   // source readers was invisible to CI because only §2 query names were
   // parsed) ----
