@@ -4,7 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import scala.util.chaining._
-import graft.functions.{bloom_agg, bloom_might_contain, cosine_lsh_keys, cosine_sim, minhash_signature, simhash64}
+import graft.functions.{bloom_agg, bloom_might_contain, cosine_lsh_keys, cosine_sim, minhash_set_signature, minhash_signature, simhash64}
 
 /** The user-facing verb set: DataFrame-in / DataFrame-out operations over
   * ANY frame (nothing here reads the test tables), so an existing
@@ -33,7 +33,7 @@ object GraftOps {
   private val trackedCaches =
     new java.util.concurrent.ConcurrentLinkedQueue[DataFrame]()
 
-  private def persistTracked(df: DataFrame): DataFrame = {
+  private[graft] def persistTracked(df: DataFrame): DataFrame = {
     val p = df.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     trackedCaches.add(p)
     p
@@ -66,8 +66,11 @@ object GraftOps {
     * Spark's own split math (maxPartitionBytes / openCostInBytes /
     * minPartitionNum over the FileIndex's size and file count), cached
     * inputs report their cached partitioning, and lineage that already
-    * crosses a shuffle (join / aggregate / window / repartition)
-    * inherits numShufflePartitions and is returned unchanged. No job
+    * crosses a shuffle (join / aggregate / window / sort) inherits
+    * numShufflePartitions and is returned unchanged. A topmost
+    * `repartition(n)` / `coalesce(n)` reports the n it delivers
+    * (coalesce never more than its input), so a frame narrowed by
+    * `coalesce(1)` is spread again. No job
     * runs to make the decision, and the decision is deterministic for
     * a given corpus + session conf.
     */
@@ -80,41 +83,51 @@ object GraftOps {
   /** Plan-build-time estimate of the task count of the stage that will
     * scan `df` (no jobs run; see [[spreadNarrowScan]]).
     */
-  private[graft] def estimatedInputPartitions(df: DataFrame): Int = {
+  private[graft] def estimatedInputPartitions(df: DataFrame): Int =
+    math.min(estimatedPartitions(df.sparkSession, df.queryExecution.optimizedPlan),
+      Int.MaxValue.toLong).toInt
+
+  private def estimatedPartitions(spark: org.apache.spark.sql.SparkSession,
+      plan: org.apache.spark.sql.catalyst.plans.logical.LogicalPlan): Long = {
     import org.apache.spark.sql.catalyst.plans.logical.{Aggregate,
-      Join => LJoin, RepartitionOperation, Sort => LSort, Window => LWindow}
+      Join => LJoin, Repartition, RepartitionByExpression,
+      RepartitionOperation, Sort => LSort, Window => LWindow}
     import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, LogicalRelation}
     import org.apache.spark.sql.execution.columnar.InMemoryRelation
-    val spark = df.sparkSession
     val conf = spark.sessionState.conf
-    val plan = df.queryExecution.optimizedPlan
-    val crossesShuffle = plan.exists {
+    val topShuffle = plan.find {
       case _: LJoin | _: Aggregate | _: LWindow | _: LSort |
            _: RepartitionOperation => true
       case _ => false
     }
-    if (crossesShuffle) return conf.numShufflePartitions
-    val est = plan.collectLeaves().map {
-      case l: LogicalRelation => l.relation match {
-        case fs: HadoopFsRelation =>
-          // Spark's FilePartition.maxSplitBytes math over the already-
-          // listed FileIndex totals: never a fresh listing, never a job
-          val openCost = conf.filesOpenCostInBytes
-          val maxBytes = conf.filesMaxPartitionBytes
-          val minParts = conf.filesMinPartitionNum
-            .getOrElse(spark.sparkContext.defaultParallelism).max(1)
-          val nFiles = fs.location.inputFiles.length.toLong
-          val totalBytes = fs.location.sizeInBytes + nFiles * openCost
-          val bytesPerCore = totalBytes / minParts
-          val maxSplit = math.min(maxBytes, math.max(openCost, bytesPerCore)).max(1L)
-          math.max(nFiles, totalBytes / maxSplit)
-        case _ => 1L
-      }
-      case m: InMemoryRelation =>
-        m.cachedPlan.outputPartitioning.numPartitions.toLong
-      case _ => 1L // LocalRelation / in-memory test frames: tiny, spread
-    }.sum
-    math.min(est, Int.MaxValue.toLong).toInt
+    topShuffle match {
+      case Some(r: Repartition) if r.shuffle => r.numPartitions
+      case Some(r: Repartition) => // coalesce: never more than its input
+        math.min(r.numPartitions.toLong, estimatedPartitions(spark, r.child))
+      case Some(r: RepartitionByExpression) if r.optNumPartitions.isDefined =>
+        r.optNumPartitions.get
+      case Some(_) => conf.numShufflePartitions
+      case None => plan.collectLeaves().map {
+        case l: LogicalRelation => l.relation match {
+          case fs: HadoopFsRelation =>
+            // Spark's FilePartition.maxSplitBytes math over the already-
+            // listed FileIndex totals: never a fresh listing, never a job
+            val openCost = conf.filesOpenCostInBytes
+            val maxBytes = conf.filesMaxPartitionBytes
+            val minParts = conf.filesMinPartitionNum
+              .getOrElse(spark.sparkContext.defaultParallelism).max(1)
+            val nFiles = fs.location.inputFiles.length.toLong
+            val totalBytes = fs.location.sizeInBytes + nFiles * openCost
+            val bytesPerCore = totalBytes / minParts
+            val maxSplit = math.min(maxBytes, math.max(openCost, bytesPerCore)).max(1L)
+            math.max(nFiles, totalBytes / maxSplit)
+          case _ => 1L
+        }
+        case m: InMemoryRelation =>
+          m.cachedPlan.outputPartitioning.numPartitions.toLong
+        case _ => 1L // LocalRelation / in-memory test frames: tiny, spread
+      }.sum
+    }
   }
 
   /** SQL fragment: the 1-based shingle start positions over a size-
@@ -252,11 +265,14 @@ object GraftOps {
   /** [[jaccardJoinBanded]] for a PRECOMPUTED 64-bit shingle-hash set
     * column — the banding escape hatch for non-text shingles (byte
     * grams on binary assets: m09). Signatures are MinHash over the
-    * hash set (h-seeded xxhash64 per element, all in-row codegen'd
-    * expressions), candidates come from band-bucket equijoins (≤
-    * `bands` bucket rows per asset regardless of gram document
-    * frequency — the property that caps a hot-gram df² blowup), and
-    * verification is exact set intersection on candidates only.
+    * hash set: slot h is the minimum of h-seeded xxhash64 over the
+    * elements, computed by the codegen'd `minhash_set_signature`
+    * expression (one compiled loop per row; the equivalent `transform`
+    * lambdas run interpreted per element). Candidates come from
+    * band-bucket equijoins (≤ `bands` bucket rows per asset regardless
+    * of gram document frequency — the property that caps a hot-gram
+    * df² blowup), and verification is exact set intersection on
+    * candidates only.
     */
   def jaccardJoinBandedSets(df: DataFrame, id: Column, shingles: Column,
                             threshold: Double, numHashes: Int = 64,
@@ -272,13 +288,15 @@ object GraftOps {
     // a many-file production corpus the scan is already parallel and no
     // exchange is added.
     val spread = spreadNarrowScan(df)
+    // sort_array, not array_sort: array_sort compares through an
+    // interpreted lambda; neither the signature nor the intersection
+    // size depends on element order
     val sets = spread.select(id.as("__id"),
-        array_sort(array_distinct(shingles)).as("__shs"))
+        sort_array(array_distinct(shingles)).as("__shs"))
       .withColumn("__n", size(col("__shs")).cast("long"))
       .pipe(persistTracked)
-    val sigs = sets.select(col("__id"), expr(
-      s"""transform(sequence(0, ${numHashes - 1}), h ->
-           array_min(transform(__shs, s -> xxhash64(h, s))))""").as("__sig"))
+    val sigs = sets.select(col("__id"),
+      minhash_set_signature(col("__shs"), numHashes).as("__sig"))
     val banded = sigs.select(col("__id"), explode(expr(
       s"transform(sequence(0, ${bands - 1}), b -> " +
         s"struct(b AS band, xxhash64(concat_ws(',', slice(__sig, b * $rowsPerBand + 1, $rowsPerBand))) AS bh))"))

@@ -25,6 +25,16 @@ object Register {
       case Seq(c, k, sh) => MinHashSignature(c, intArg(k, "numHashes"), intArg(sh, "shingleSize"))
       case args => throw new IllegalArgumentException(s"minhash_signature(text[, k, shingle]): got ${args.size} args")
     },
+    "minhash_set_signature" -> {
+      case Seq(c) => MinHashSetSignature(c, 64)
+      case Seq(c, k) => MinHashSetSignature(c, intArg(k, "numHashes"))
+      case args => throw new IllegalArgumentException(s"minhash_set_signature(hashes[, k]): got ${args.size} args")
+    },
+    "byte_gram_hashes" -> {
+      case Seq(c) => ByteGramHashes(c, 16)
+      case Seq(c, k) => ByteGramHashes(c, intArg(k, "gram length"))
+      case args => throw new IllegalArgumentException(s"byte_gram_hashes(bytes[, k]): got ${args.size} args")
+    },
     "simhash64" -> {
       case Seq(c) => SimHash64(c, 2)
       case Seq(c, sh) => SimHash64(c, intArg(sh, "shingleSize"))

@@ -1,10 +1,13 @@
 package graft.functions
 
-import org.apache.spark.sql.Column
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
+import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
+import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression, UnsafeArrayData, XXH64}
+import org.apache.spark.sql.catalyst.expressions.codegen.{CodeGenerator, CodegenContext, ExprCode, FalseLiteral}
+import org.apache.spark.sql.catalyst.expressions.codegen.Block._
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
 import org.apache.spark.sql.types._
+import org.apache.spark.unsafe.Platform
 import org.apache.spark.unsafe.types.UTF8String
 
 /** Per-row signature expressions for large-scale dedup.
@@ -108,6 +111,93 @@ object Hashing {
     new GenericArrayData(minhash(s.toString, k, shingle))
   def simhashLong(s: UTF8String, shingle: Int): Long =
     simhash(s.toString, shingle)
+
+  /** Spark's xxhash64 seed: `xxhash64(a, b, ...)` starts here and feeds
+    * each argument's hash in as the next argument's seed; a null
+    * argument is skipped, so `xxhash64(null)` is the seed itself. */
+  final val XxSeed: Long = 42L
+
+  /** MinHash signature over a precomputed 64-bit hash set, equal to
+    * `transform(sequence(0, numHashes-1), h -> array_min(transform(set,
+    * s -> xxhash64(h, s))))`: slot h is the minimum over the elements of
+    * XXH64.hashLong(s, seed_h), with seed_h = XXH64.hashInt(h, 42)
+    * computed once per slot. A null element hashes to seed_h; a null or
+    * empty set has no minimum, so every slot is null.
+    */
+  def minhashSetData(set: ArrayData, numHashes: Int): ArrayData = {
+    val n = if (set == null) 0 else set.numElements()
+    if (n == 0) return new GenericArrayData(new Array[Any](numHashes))
+    val xs = new Array[Long](n)
+    var m = 0
+    var hasNull = false
+    var i = 0
+    while (i < n) {
+      if (set.isNullAt(i)) hasNull = true else { xs(m) = set.getLong(i); m += 1 }
+      i += 1
+    }
+    val sig = new Array[Long](numHashes)
+    var h = 0
+    while (h < numHashes) {
+      val seed = XXH64.hashInt(h, XxSeed)
+      var min = if (hasNull) seed else Long.MaxValue
+      var j = 0
+      while (j < m) {
+        val v = XXH64.hashLong(xs(j), seed)
+        if (v < min) min = v
+        j += 1
+      }
+      sig(h) = min
+      h += 1
+    }
+    UnsafeArrayData.fromPrimitiveArray(sig)
+  }
+
+  /** Distinct xxhash64 values of the byte k-grams of `bs`, in first-
+    * occurrence order, equal to `array_distinct(transform(sequence(1,
+    * greatest(octet_length(bs)-k+1, 1)), i -> xxhash64(substring(bs, i,
+    * k))))`. Each window is hashed in place (no copy per gram). A payload
+    * shorter than k is one gram, the whole payload; a null payload gives
+    * [42] (`greatest` skips the null bound, and xxhash64(null) is the
+    * seed).
+    */
+  def byteGramData(bs: Array[Byte], k: Int): ArrayData = {
+    if (bs == null) return UnsafeArrayData.fromPrimitiveArray(Array(XxSeed))
+    val windows = math.max(bs.length - k + 1, 1)
+    val len = math.min(k, bs.length)
+    val out = new Array[Long](windows)
+    val seen = new LongSet(windows)
+    var m = 0
+    var i = 0
+    while (i < windows) {
+      val h = XXH64.hashUnsafeBytes(bs, Platform.BYTE_ARRAY_OFFSET + i, len, XxSeed)
+      if (seen.add(h)) { out(m) = h; m += 1 }
+      i += 1
+    }
+    UnsafeArrayData.fromPrimitiveArray(
+      if (m == windows) out else java.util.Arrays.copyOf(out, m))
+  }
+
+  /** Insert-only open-addressing set of longs sized for `expected`
+    * insertions (load <= 1/2, linear probing); 0 is tracked apart
+    * because it marks an empty slot. */
+  private final class LongSet(expected: Int) {
+    private val slots =
+      new Array[Long](Integer.highestOneBit(math.max(4, 2 * expected - 1)) << 1)
+    private val mask = slots.length - 1
+    private var hasZero = false
+
+    /** True when `x` was not in the set before. */
+    def add(x: Long): Boolean = {
+      if (x == 0L) { val fresh = !hasZero; hasZero = true; return fresh }
+      var i = (mix64(x) & mask).toInt
+      while (slots(i) != 0L) {
+        if (slots(i) == x) return false
+        i = (i + 1) & mask
+      }
+      slots(i) = x
+      true
+    }
+  }
   def lshKeysData(arr: ArrayData, numTables: Int, planesPerTable: Int): ArrayData = {
     val n = arr.numElements()
     val keys = new Array[Int](numTables)
@@ -241,6 +331,66 @@ case class SimHash64(child: Expression, shingleSize: Int)
     defineCodeGen(ctx, ev,
       c => s"graft.functions.Hashing.simhashLong($c, $shingleSize)")
   override def prettyName: String = "simhash64"
+  override protected def withNewChildInternal(newChild: Expression): Expression =
+    copy(child = newChild)
+}
+
+/** MinHash signature (array<bigint>, `numHashes` slots) of a
+  * precomputed array<bigint> hash set ([[Hashing.minhashSetData]]).
+  * Not null-intolerant: a null set yields `numHashes` nulls, as the
+  * higher-order-function form it replaces does.
+  */
+case class MinHashSetSignature(child: Expression, numHashes: Int)
+    extends UnaryExpression {
+  require(numHashes > 0, s"numHashes must be positive, got $numHashes")
+  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
+    case ArrayType(LongType, _) => TypeCheckResult.TypeCheckSuccess
+    case t => TypeCheckResult.TypeCheckFailure(
+      s"$prettyName expects array<bigint>, got ${t.catalogString}")
+  }
+  override def dataType: DataType = ArrayType(LongType, containsNull = true)
+  override def nullable: Boolean = false
+  override def eval(input: InternalRow): Any =
+    Hashing.minhashSetData(child.eval(input).asInstanceOf[ArrayData], numHashes)
+  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
+    val c = child.genCode(ctx)
+    ev.copy(code = code"""
+      ${c.code}
+      ${CodeGenerator.javaType(dataType)} ${ev.value} =
+        graft.functions.Hashing.minhashSetData(${c.isNull} ? null : ${c.value}, $numHashes);""",
+      isNull = FalseLiteral)
+  }
+  override def prettyName: String = "minhash_set_signature"
+  override protected def withNewChildInternal(newChild: Expression): Expression =
+    copy(child = newChild)
+}
+
+/** Distinct xxhash64 byte k-gram hashes (array<bigint>) of a binary
+  * payload ([[Hashing.byteGramData]]). Not null-intolerant: a null
+  * payload yields [42], as the higher-order-function form it replaces
+  * does.
+  */
+case class ByteGramHashes(child: Expression, k: Int)
+    extends UnaryExpression {
+  require(k > 0, s"gram length must be positive, got $k")
+  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
+    case BinaryType => TypeCheckResult.TypeCheckSuccess
+    case t => TypeCheckResult.TypeCheckFailure(
+      s"$prettyName expects binary, got ${t.catalogString}")
+  }
+  override def dataType: DataType = ArrayType(LongType, containsNull = false)
+  override def nullable: Boolean = false
+  override def eval(input: InternalRow): Any =
+    Hashing.byteGramData(child.eval(input).asInstanceOf[Array[Byte]], k)
+  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
+    val c = child.genCode(ctx)
+    ev.copy(code = code"""
+      ${c.code}
+      ${CodeGenerator.javaType(dataType)} ${ev.value} =
+        graft.functions.Hashing.byteGramData(${c.isNull} ? null : ${c.value}, $k);""",
+      isNull = FalseLiteral)
+  }
+  override def prettyName: String = "byte_gram_hashes"
   override protected def withNewChildInternal(newChild: Expression): Expression =
     copy(child = newChild)
 }

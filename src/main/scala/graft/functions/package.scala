@@ -4,7 +4,16 @@ import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.expressions.Expression
 import org.apache.spark.sql.graftbridge.Bridge
 
-/** Column-level API for graft's custom Catalyst expressions. */
+/** Column-level API for graft's custom Catalyst expressions.
+  *
+  * Spark's higher-order functions (`transform`, comparator `array_sort`,
+  * `filter`, `zip_with`, `aggregate`) are not code-generated: every
+  * element runs the lambda through the interpreter, so a lambda over a
+  * per-row array costs an interpreted call per element inside an
+  * otherwise compiled stage. Per-element work that sits on a hot path
+  * belongs here instead, as an expression whose codegen calls a static
+  * loop (see [[minhash_set_signature]] and [[byte_gram_hashes]]).
+  */
 package object functions {
   private def toCol(e: Expression): Column = Bridge.column(e)
   private def toExpr(c: Column): Expression = Bridge.expression(c)
@@ -12,6 +21,17 @@ package object functions {
   /** k-function MinHash signature over word shingles (array<long>). */
   def minhash_signature(c: Column, numHashes: Int = 64, shingleSize: Int = 3): Column =
     toCol(MinHashSignature(toExpr(c), numHashes, shingleSize))
+
+  /** MinHash signature over a precomputed array<bigint> hash set:
+    * slot h is the minimum of `xxhash64(h, s)` over the elements s. */
+  def minhash_set_signature(shs: Column, numHashes: Int = 64): Column =
+    toCol(MinHashSetSignature(toExpr(shs), numHashes))
+
+  /** Distinct xxhash64 hashes of the byte k-grams of a binary payload,
+    * in first-occurrence order (one gram, the whole payload, when it is
+    * shorter than k). */
+  def byte_gram_hashes(bs: Column, k: Int = 16): Column =
+    toCol(ByteGramHashes(toExpr(bs), k))
 
   /** 64-bit SimHash over word shingles. */
   def simhash64(c: Column, shingleSize: Int = 2): Column =

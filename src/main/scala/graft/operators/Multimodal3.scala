@@ -3,6 +3,7 @@ package graft.operators
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.Tables
+import scala.util.chaining._
 
 /** Multimodal plumbing, part 3: content-addressed asset storage. */
 object Multimodal3 {
@@ -137,14 +138,17 @@ object Multimodal3 {
   // on this corpus, and unbounded on real multi-MB assets. The oracle
   // keeps the hex-substring formulation: hex is injective, so the
   // byte-gram equality classes — all the join/count semantics depend
-  // on — are identical.
+  // on — are identical. Both routes take their grams from the codegen'd
+  // byte_gram_hashes expression (each window hashed in place over the
+  // raw bytes); the lsh route's signatures come from the codegen'd
+  // minhash_set_signature inside jaccardJoinBandedSets. Spark's
+  // `transform` lambdas compute the same values but run interpreted per
+  // element, about 4x slower on the lsh route (2,000-doc corpus, 4
+  // vCPUs).
   val m09_asset_neardup: Q = (s, d) => {
     val assets = Tables.documents(s, d)
       .select(col("doc_id"), encode(col("text"), "UTF-8").as("bs"))
-    val gramExpr = expr(
-      """array_distinct(transform(
-           sequence(1, greatest(octet_length(bs) - 15, 1)),
-           i -> xxhash64(substring(bs, i, 16))))""")
+    val gramExpr = graft.functions.byte_gram_hashes(col("bs"), 16)
     // the duplicated-corpus escape hatch the text family has: conf
     // graft.neardup.strategy=lsh reroutes candidates through MinHash
     // bands over the byte grams (≤ bands bucket rows per asset, no df²
@@ -170,13 +174,13 @@ object Multimodal3 {
     // xxhash64 pass re-runs as a scan-side Filter on ONE task (the
     // one-row-group floor), then again above the exchange (StageProfile:
     // a 2.2 s single-task stage on a query that otherwise runs ~2 s).
-    // The gram array is never empty (sequence(1, greatest(..., 1)) has
-    // >= 1 element), so outer-explode output is row-identical.
+    // The gram array is never empty (a payload shorter than the gram is
+    // one gram), so outer-explode output is row-identical.
     val shingled = graft.api.GraftOps.spreadNarrowScan(assets)
       .select(col("doc_id"), gramExpr.as("shs"))
       .select(col("doc_id"), size(col("shs")).cast("long").as("n"),
         explode_outer(col("shs")).as("sh"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      .pipe(graft.api.GraftOps.persistTracked)
     // r13 second pass: n rides THROUGH the join (jaccardJoin's shape)
     // instead of joining a sizes table back after the pair aggregate —
     // StageProfile showed the two sizes passes re-scanning the whole
@@ -713,10 +717,11 @@ object Multimodal3 {
     // cached array with an integer predicate (fine: v < 32 ⇔ first char
     // in ('0','1'); default: v < 16 ⇔ '0'; coarse: v = 0 ⇔ '00') —
     // boundary sets, chunks and ledgers are bit-identical to the
-    // three-pass form. The persist trades one corpus-scale int-array
-    // cache (~1 int per payload char, spilling to disk beyond memory)
-    // for two full md5 scans — the right trade wherever the tuning
-    // table is worth running at all. positions: null past end-of-text
+    // three-pass form. The persist (tracked, so GraftOps.releaseCaches
+    // frees it) trades one corpus-scale int-array cache (~1 int per
+    // payload char, spilling to disk beyond memory) for two full md5
+    // scans — the right trade wherever the tuning table is worth
+    // running at all. positions: null past end-of-text
     // keeps the transform index-free of filter (same trick as
     // withCdcChunks' i <= length guard).
     val pref = graft.api.GraftOps.spreadNarrowScan(docs)
@@ -727,7 +732,7 @@ object Multimodal3 {
                CAST(conv(substring(md5(substring(text, i - 7, 8)), 1, 2),
                          16, 10) AS INT),
                CAST(NULL AS INT)))"""))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      .pipe(graft.api.GraftOps.persistTracked)
     def pass(cfg: String, p: Double, pred: String): DataFrame =
       pref
         .withColumn("bnds", expr(

@@ -99,6 +99,22 @@ class DedupSimilaritySpec extends AnyFunSuite {
     }
   }
 
+  test("m09 (both routes) and m18 leave no cache behind after releaseCaches") {
+    // no clearCache(): GraftOps.releaseCaches alone must free every
+    // intermediate these operators persist
+    def persisted = spark.sparkContext.getPersistentRDDs.keySet
+    val before = persisted
+    operators.Multimodal3.m09_asset_neardup(spark, sf).collect()
+    spark.conf.set("graft.neardup.strategy", "lsh")
+    try operators.Multimodal3.m09_asset_neardup(spark, sf).collect()
+    finally spark.conf.unset("graft.neardup.strategy")
+    operators.Multimodal3.m18_chunk_tuning(spark, sf).collect()
+    assert((persisted -- before).size >= 3, "expected m09 x2 and m18 to cache")
+    api.GraftOps.releaseCaches()
+    assert((persisted -- before).isEmpty,
+      s"caches left after releaseCaches: ${persisted -- before}")
+  }
+
   test("d06 lsh-verified pairs: jaccard values exact, recall >= 0.9 vs d03") {
     val exact = operators.Dedup.d03_ngram_jaccard(spark, sf)
       .collect().map(r => (r.getLong(0), r.getLong(1)) -> r.getDouble(3)).toMap

@@ -22,6 +22,146 @@ class FunctionsSpec extends AnyFunSuite {
       .select(col("doc_id"), graft.functions.simhash64(col("text")).as("sh"))
       .orderBy("doc_id").limit(5).collect().map(_.getLong(1))
     assert(rows.map(_.getLong(1)).sameElements(apiSh))
+    // the set-MinHash and byte-gram kernels, with and without their
+    // integer-literal arguments, equal the Column API
+    val kernels = spark.sql(
+      """SELECT byte_gram_hashes(encode(text, 'UTF-8')) AS g16,
+           byte_gram_hashes(encode(text, 'UTF-8'), 4) AS g4,
+           minhash_set_signature(byte_gram_hashes(encode(text, 'UTF-8'))) AS s64,
+           minhash_set_signature(byte_gram_hashes(encode(text, 'UTF-8'), 4), 8) AS s8
+         FROM docs_sql ORDER BY doc_id LIMIT 5""").collect()
+    val bs = encode(col("text"), "UTF-8")
+    val apiKernels = Tables.documents(spark, sf).orderBy("doc_id").limit(5)
+      .select(functions.byte_gram_hashes(bs, 16), functions.byte_gram_hashes(bs, 4),
+        functions.minhash_set_signature(functions.byte_gram_hashes(bs, 16), 64),
+        functions.minhash_set_signature(functions.byte_gram_hashes(bs, 4), 8))
+      .collect()
+    assert(kernels.toSeq == apiKernels.toSeq)
+    assert(kernels.forall(r => r.getSeq[Long](2).size == 64 && r.getSeq[Long](3).size == 8))
+    // wrong input types fail analysis instead of a cast error at run time
+    intercept[org.apache.spark.sql.AnalysisException](
+      spark.sql("SELECT byte_gram_hashes(text) FROM docs_sql").collect())
+    intercept[org.apache.spark.sql.AnalysisException](
+      spark.sql("SELECT minhash_set_signature(array(1, 2)) FROM docs_sql").collect())
+  }
+
+  // The higher-order-function SQL the two kernels replace, verbatim.
+  private def hofGrams(k: Int) =
+    s"""array_distinct(transform(sequence(1, greatest(octet_length(bs) - ${k - 1}, 1)),
+         i -> xxhash64(substring(bs, i, $k))))"""
+  private def hofSignature(numHashes: Int) =
+    s"""transform(sequence(0, ${numHashes - 1}),
+         h -> array_min(transform(shs, s -> xxhash64(h, s))))"""
+
+  /** Run `body` once with whole-stage codegen and once fully interpreted
+    * (no whole-stage codegen, no generated projections). */
+  private def codegenAndInterpreted(body: String => Unit): Unit = {
+    body("codegen")
+    val interpreted = Seq("spark.sql.codegen.wholeStage" -> "false",
+      "spark.sql.codegen.factoryMode" -> "NO_CODEGEN")
+    val saved = interpreted.map { case (k, _) => k -> spark.conf.getOption(k) }
+    try {
+      interpreted.foreach { case (k, v) => spark.conf.set(k, v) }
+      body("interpreted")
+    } finally saved.foreach {
+      case (k, Some(v)) => spark.conf.set(k, v)
+      case (k, None) => spark.conf.unset(k)
+    }
+  }
+
+  test("byte_gram_hashes and minhash_set_signature equal their higher-order-function forms bit for bit") {
+    import spark.implicits._
+    val dir = java.nio.file.Files.createTempDirectory("graft_kernels").toString
+    // every document plus the edge payloads, read back from parquet so
+    // the projections run in a scan stage (a local relation would be
+    // folded by the optimizer, interpreted, before codegen sees it)
+    val edgePayloads: Seq[Array[Byte]] = null +: Array.emptyByteArray +:
+      Seq("a", "0123456789abcde", "0123456789abcdef", "0123456789abcdefg",
+        "naïve café — 日本語のテキスト ✓ über", "a" * 40).map(_.getBytes("UTF-8"))
+    Tables.documents(spark, sf)
+      .select(col("doc_id"), encode(col("text"), "UTF-8").as("bs"))
+      .unionByName(edgePayloads.zipWithIndex
+        .map { case (b, i) => (-1L - i, b) }.toDF("doc_id", "bs"))
+      .write.parquet(s"$dir/payloads")
+    val payloads = spark.read.parquet(s"$dir/payloads")
+    val nPayloads = payloads.count()
+    // sets: every document's 16-gram set, plus empty, null, a set
+    // holding a null element and a set of only a null
+    payloads.where(col("doc_id") >= 0)
+      .select(col("doc_id"), expr(hofGrams(16)).as("shs"))
+      .unionByName(spark.sql(
+        """SELECT -1L AS doc_id, CAST(array() AS array<bigint>) AS shs
+           UNION ALL SELECT -2L, CAST(NULL AS array<bigint>)
+           UNION ALL SELECT -3L, array(5L, CAST(NULL AS BIGINT), -7L)
+           UNION ALL SELECT -4L, array(CAST(NULL AS BIGINT))"""))
+      .write.parquet(s"$dir/sets")
+    val sets = spark.read.parquet(s"$dir/sets")
+    val nSets = sets.count()
+
+    def assertSame(mode: String, what: String, df: org.apache.spark.sql.DataFrame,
+                   n: Long): Unit = {
+      assert(df.schema(1).dataType == df.schema(2).dataType,
+        s"$mode $what: type ${df.schema(1).dataType} vs ${df.schema(2).dataType}")
+      val rows = df.collect()
+      assert(rows.length == n)
+      rows.foreach(r => assert(r.get(1) == r.get(2),
+        s"$mode $what, doc ${r.getLong(0)}: kernel ${r.get(1)} vs sql ${r.get(2)}"))
+    }
+    codegenAndInterpreted { mode =>
+      for (k <- Seq(1, 4, 16))
+        assertSame(mode, s"byte_gram_hashes k=$k", payloads.select(col("doc_id"),
+          functions.byte_gram_hashes(col("bs"), k), expr(hofGrams(k))), nPayloads)
+      for (h <- Seq(1, 64))
+        assertSame(mode, s"minhash_set_signature $h", sets.select(col("doc_id"),
+          functions.minhash_set_signature(col("shs"), h), expr(hofSignature(h))), nSets)
+    }
+    // the edge rules, spelled out
+    val byId = payloads.select(col("doc_id"), functions.byte_gram_hashes(col("bs"), 16))
+      .where(col("doc_id") < 0).collect().map(r => r.getLong(0) -> r.getSeq[Long](1)).toMap
+    assert(byId(-1L) == Seq(42L), "a null payload hashes to the xxhash64 seed")
+    assert(byId(-2L).size == 1 && byId(-3L).size == 1 && byId(-4L).size == 1
+      && byId(-5L).size == 1, "payloads up to k bytes are one gram")
+    assert(byId(-6L).size == 2 && byId(-8L) == Seq(byId(-8L).head),
+      "17 bytes is two grams; repeated windows keep one")
+    val sigs = sets.select(col("doc_id"), functions.minhash_set_signature(col("shs"), 8))
+      .where(col("doc_id") < 0).collect().map(r => r.getLong(0) -> r.getSeq[Any](1)).toMap
+    assert(sigs(-1L) == Seq.fill(8)(null) && sigs(-2L) == Seq.fill(8)(null),
+      "an empty or null set has no minimum: every slot is null")
+  }
+
+  test("m09's lsh plan runs no higher-order function over the shingle set") {
+    import org.apache.spark.sql.catalyst.expressions.{ArraySort, ArrayTransform, Expression}
+    import org.apache.spark.sql.catalyst.plans.QueryPlan
+    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
+    // every expression of the plan, including those of the cached
+    // relations it reads (an InMemoryRelation keeps its adaptive
+    // physical plan as an inner child)
+    def exprs(node: QueryPlan[_]): Seq[Expression] = {
+      val inner = node match {
+        case a: AdaptiveSparkPlanExec => Seq(a.executedPlan)
+        case _ => node.children ++ node.innerChildren
+      }
+      node.expressions.flatMap(_.collect { case e => e }) ++
+        inner.collect { case q: QueryPlan[_] => q }.flatMap(exprs)
+    }
+    spark.conf.set("graft.neardup.strategy", "lsh")
+    try {
+      val plan = operators.Multimodal3.m09_asset_neardup(spark, sf)
+        .queryExecution.optimizedPlan
+      val all = exprs(plan)
+      assert(!all.exists(_.isInstanceOf[ArraySort]), "array_sort in m09's plan")
+      // the band-key transform runs over a constant sequence; no
+      // transform may run over row data (the grams or the shingle set)
+      val overRows = all.collect {
+        case t: ArrayTransform if t.argument.references.nonEmpty => t.sql
+      }
+      assert(overRows.isEmpty, s"per-element lambdas over row data: $overRows")
+      assert(all.exists(_.isInstanceOf[functions.ByteGramHashes]))
+      assert(all.exists(_.isInstanceOf[functions.MinHashSetSignature]))
+    } finally {
+      spark.conf.unset("graft.neardup.strategy")
+      api.GraftOps.releaseCaches()
+    }
   }
 
   test("cosine_sim in SQL matches Column API") {

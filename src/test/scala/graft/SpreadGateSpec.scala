@@ -58,6 +58,27 @@ class SpreadGateSpec extends AnyFunSuite {
     assert(leadingExchanges(out) == 0)
   }
 
+  test("a coalesce(1) input is spread; a repartition(numShufflePartitions) input is not") {
+    val want = spark.sessionState.conf.numShufflePartitions
+    val dir = java.nio.file.Files
+      .createTempDirectory("graft_spread_coalesce").toString
+    spark.range(0, 800).select(col("id").as("doc_id"))
+      .repartition(8).write.mode("overwrite").parquet(dir)
+    // a parallel scan narrowed to one task: the gate must see the 1
+    val narrowed = spark.read.parquet(dir).coalesce(1)
+    assert(graft.api.GraftOps.estimatedInputPartitions(narrowed) == 1)
+    assert(leadingExchanges(graft.api.GraftOps.spreadNarrowScan(narrowed)) == 1,
+      "expected the spread's round-robin exchange after coalesce(1)")
+    // coalesce never raises the count above its input's
+    assert(graft.api.GraftOps.estimatedInputPartitions(
+      Tables.documents(spark, sf).coalesce(want)) == 1)
+    // a narrow scan already repartitioned to the session parallelism
+    val spread = Tables.documents(spark, sf).repartition(want)
+    assert(graft.api.GraftOps.estimatedInputPartitions(spread) == want)
+    assert(leadingExchanges(graft.api.GraftOps.spreadNarrowScan(spread)) == 1,
+      "only the caller's own exchange, no second spread")
+  }
+
   test("shingle verbs no longer crash on docs shorter than the window") {
     import spark.implicits._
     val docs = Seq((1L, "only two"), (2L, "a b c d e f"),
