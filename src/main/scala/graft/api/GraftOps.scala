@@ -130,21 +130,54 @@ object GraftOps {
     }
   }
 
-  /** SQL fragment: the 1-based shingle start positions over a size-
-    * `sizeExpr` token array with window `k` — `sequence(1, size-k+1)`
-    * when the doc is long enough, the EMPTY array otherwise. The naive
-    * `sequence(1, greatest(size-k+1, 0))` yields [1, 0] for a doc
-    * SHORTER than the window (Spark infers step -1 when start > stop),
-    * and the shingle transform then evaluates slice(arr, 0, k), which
-    * throws — SQL array indices start at 1. The slice guard keeps the
-    * positions genuinely empty for short docs (matching DuckDB, where
-    * generate_series(1, n) is [] at n <= 0) with no CASE branch in the
-    * hot expression.
+  // ---- word k-grams: the one shingle definition ---------------------
+  /** Gram key kinds for [[wordGrams]]. The DuckDB oracles reproduce the
+    * keys, binding Spark's `xxhash64` (seed 42) and `md5` of the UTF-8
+    * joined string; callers keep their own key kind and
+    * `array_distinct`/`array_sort` wrapper, as oracle hashes depend on both.
     */
-  private[graft] def shinglePositions(sizeExpr: String, k: Int): String = {
-    val m = s"$sizeExpr - ${k - 1}"
+  private[graft] sealed abstract class GramKey(key: String => String) {
+    def apply(gram: String): String = key(gram)
+  }
+  private[graft] object GramKey {
+    case object Text extends GramKey(g => g)
+    case object XxHash64 extends GramKey(g => s"xxhash64($g)")
+    case object Md5 extends GramKey(g => s"unhex(md5($g))") // binary(16)
+  }
+
+  /** SQL: the word `k`-grams of the array expression `words`, in order
+    * with repeats; gram i is `key(concat_ws(' ', slice(words, i, k)))`.
+    * A doc shorter than `k` words yields the EMPTY array, matching
+    * DuckDB (see [[gramPositions]]).
+    *
+    * `minhash_signature`'s Scala shingler (`TextExpressions.shingleHashes`:
+    * lowercased, `\s+` split, a short doc is one gram of all its words)
+    * is a separate contract, left alone on purpose.
+    */
+  private[graft] def wordGrams(words: String, k: Int, key: GramKey): String =
+    s"transform(${gramPositions(words, k)}, i -> ${key(s"concat_ws(' ', slice($words, i, $k))")})"
+
+  /** SQL: the 1-based starts of the `k`-word windows over `words`:
+    * `sequence(1, size-k+1)`, or EMPTY when the doc is shorter than `k`
+    * (DuckDB's generate_series(1, n) is [] at n <= 0). Unguarded, Spark's
+    * sequence runs backwards to [1, 0] there and the window lambda
+    * indexes outside the array, which throws under ANSI. The slice guard
+    * needs no CASE branch in the hot expression. The bigram sites (t11,
+    * t23, t29, t32) use it directly.
+    */
+  private[graft] def gramPositions(words: String, k: Int): String = {
+    val m = s"size($words) - ${k - 1}"
     s"slice(sequence(1, greatest($m, 1)), 1, greatest($m, 0))"
   }
+
+  /** SQL: one struct(band, bh) per MinHash-LSH band of the signature
+    * array `sig`, bh = xxhash64 of the band's comma-joined slots. Batch
+    * (`minhashCandidates`) and streaming (`StreamOps`) bucket on this one
+    * key, which is what makes their candidate sets equal.
+    */
+  private[graft] def bandKeys(sig: String, bands: Int, rowsPerBand: Int): String =
+    s"transform(sequence(0, ${bands - 1}), b -> struct(b AS band, " +
+      s"xxhash64(concat_ws(',', slice($sig, b * $rowsPerBand + 1, $rowsPerBand))) AS bh))"
 
   /** Exact dedup: keep one row (min orderBy key) per normalized key.
     * One shuffle on the hash; payloads move only in the final semi-join.
@@ -171,9 +204,7 @@ object GraftOps {
       .select(id.as("__id"),
         minhash_signature(text, numHashes, shingleWords).as("__sig"))
     val banded = sigs.select(col("__id"), explode(expr(
-      s"transform(sequence(0, ${bands - 1}), b -> " +
-        s"struct(b AS band, xxhash64(concat_ws(',', slice(__sig, b * $rowsPerBand + 1, $rowsPerBand))) AS bh))"))
-      .as("__b"))
+      bandKeys("__sig", bands, rowsPerBand))).as("__b"))
       .select(col("__id"), col("__b.band"), col("__b.bh"))
     banded.as("x").join(banded.as("y"), Seq("band", "bh"))
       .where(col("x.__id") < col("y.__id"))
@@ -199,9 +230,7 @@ object GraftOps {
     val shingled = spreadNarrowScan(df)
       .select(id.as("__id"), split(text, " ").as("__w"))
       .select(col("__id"), expr(
-        s"""array_distinct(transform(
-             ${shinglePositions("size(__w)", n)},
-             i -> xxhash64(concat_ws(' ', slice(__w, i, $n)))))""").as("__shs"))
+        s"array_distinct(${wordGrams("__w", n, GramKey.XxHash64)})").as("__shs"))
       // explode_outer, NOT explode (the m09 lesson, guide §7.2): explode
       // lets InferFiltersFromGenerate add `size(__shs) > 0`, and pushdown
       // re-runs the WHOLE per-gram xxhash64 transform as a scan-side
@@ -246,9 +275,7 @@ object GraftOps {
     val sets = spreadNarrowScan(df)
       .select(id.as("__id"), split(text, " ").as("__w"))
       .select(col("__id"), expr(
-        s"""array_sort(array_distinct(transform(
-             ${shinglePositions("size(__w)", n)},
-             i -> xxhash64(concat_ws(' ', slice(__w, i, $n))))))""").as("__shs"))
+        s"array_sort(array_distinct(${wordGrams("__w", n, GramKey.XxHash64)}))").as("__shs"))
       .withColumn("__n", size(col("__shs")).cast("long"))
     minhashCandidates(df, id, text, numHashes, bands, n)
       .join(sets.select(col("__id").as("id_a"), col("__shs").as("__sa"),
@@ -298,9 +325,7 @@ object GraftOps {
     val sigs = sets.select(col("__id"),
       minhash_set_signature(col("__shs"), numHashes).as("__sig"))
     val banded = sigs.select(col("__id"), explode(expr(
-      s"transform(sequence(0, ${bands - 1}), b -> " +
-        s"struct(b AS band, xxhash64(concat_ws(',', slice(__sig, b * $rowsPerBand + 1, $rowsPerBand))) AS bh))"))
-      .as("__b"))
+      bandKeys("__sig", bands, rowsPerBand))).as("__b"))
       .select(col("__id"), col("__b.band"), col("__b.bh"))
     val cands = banded.as("x").join(banded.as("y"), Seq("band", "bh"))
       .where(col("x.__id") < col("y.__id"))
@@ -722,9 +747,7 @@ object GraftOps {
     val grams = df
       .select(id.as("__id"), split(text, "\\s+").as("__w"))
       .select(col("__id"), explode(expr(
-        s"""array_distinct(transform(
-             ${shinglePositions("size(__w)", n)},
-             i -> unhex(md5(concat_ws(' ', slice(__w, i, $n))))))""")).as("__g"))
+        s"array_distinct(${wordGrams("__w", n, GramKey.Md5)})")).as("__g"))
       .pipe(persistTracked)
     val firstSeen = grams.groupBy("__g").agg(min("__id").as("__first"))
     grams.join(firstSeen, "__g")
@@ -1068,9 +1091,7 @@ object GraftOps {
     val sets = spreadNarrowScan(df)
       .select(id.as("__id"), split(text, " ").as("__w"))
       .select(col("__id"), expr(
-        s"""array_sort(array_distinct(transform(
-             ${shinglePositions("size(__w)", n)},
-             i -> xxhash64(concat_ws(' ', slice(__w, i, $n))))))""").as("__shs"))
+        s"array_sort(array_distinct(${wordGrams("__w", n, GramKey.XxHash64)}))").as("__shs"))
       .withColumn("__n", size(col("__shs")).cast("long"))
       .pipe(persistTracked)
     val rows = sets.select(col("__id"), col("__n"), explode(col("__shs")).as("__tok"))
@@ -1532,9 +1553,7 @@ object GraftOps {
   private def shingleSignatures(base: DataFrame): DataFrame =
     base.select(col("id"), split(col("__t"), " ").as("__w"))
       .select(col("id"), expr(
-        s"""array_distinct(transform(
-             ${shinglePositions("size(__w)", 3)},
-             i -> xxhash64(concat_ws(' ', slice(__w, i, 3)))))""").as("__shs"))
+        s"array_distinct(${wordGrams("__w", 3, GramKey.XxHash64)})").as("__shs"))
       .select(col("id"), size(col("__shs")).cast("long").as("n"),
         explode(col("__shs")).as("sh"))
 
@@ -2085,9 +2104,7 @@ object GraftOps {
     val index = docs
       .select(col("__id").as("a"), length(col("__t")).as("la"),
         explode(expr(
-          s"""array_distinct(transform(
-               ${shinglePositions("size(split(__t, ' '))", 3)},
-               i -> xxhash64(concat_ws(' ', slice(split(__t, ' '), i, 3)))))"""))
+          s"array_distinct(${wordGrams("split(__t, ' ')", 3, GramKey.XxHash64)})"))
           .as("g"))
     val cands = probe.join(index, "g")
       .where(col("a") =!= col("b") && col("la") >= col("lb"))

@@ -4,6 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.Tables
 import graft.api.{Pipeline, Stage}
+import graft.api.GraftOps.{GramKey, wordGrams}
 
 /** p01: the end-to-end training-corpus cleaning pipeline — the flagship
   * composition of the LLM-data operators (SURVEY.md §2), built with
@@ -520,9 +521,7 @@ object CorpusPipeline {
     def grams(df: DataFrame) = df
       .select(col("doc_id"), split(col("text"), " ").as("w"))
       .select(col("doc_id"), explode(expr(
-        """array_distinct(transform(
-             slice(sequence(1, greatest(size(w) - 7, 1)), 1, greatest(size(w) - 7, 0)),
-             i -> unhex(md5(concat_ws(' ', slice(w, i, 8))))))""")).as("g"))
+        s"array_distinct(${wordGrams("w", 8, GramKey.Md5)})")).as("g"))
     val docs = Tables.documents(s, d)
     val evalIdx = grams(docs.filter(col("doc_id") % 10 === 0))
       .select("g").distinct()

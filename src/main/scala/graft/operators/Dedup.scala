@@ -4,6 +4,8 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.Tables
 import graft.functions.{minhash_signature, simhash64}
+import graft.api.GraftOps.{GramKey, persistTracked, wordGrams}
+import scala.util.chaining._
 
 /** Training-data dedup family — SURVEY.md §2.
   *
@@ -115,7 +117,8 @@ object Dedup {
     * the same pair set — the persist means the candidate join runs once
     * per session, every consumer reads the (tiny) verified set from
     * cache. Spark's CacheManager matches by canonicalized plan, so
-    * independent invocations share the entry.
+    * independent invocations share the entry. Every persist here is
+    * tracked, so `GraftOps.releaseCaches` frees it.
     *
     * Spark conf `graft.neardup.strategy` routes the candidate join for
     * the WHOLE family at once: "shingle" (default — the exact shared-
@@ -136,16 +139,14 @@ object Dedup {
         .jaccardJoinBanded(Tables.documents(s, d), col("doc_id"), col("text"), 0.5)
         .select(col("id_a").as("da"), col("id_b").as("db"),
           col("shared"), col("jaccard"))
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+        .pipe(persistTracked)
     val shingled = Tables.documents(s, d)
       .select(col("doc_id"), split(col("text"), " ").as("words"))
       .select(col("doc_id"), expr(
-        """array_distinct(transform(
-             slice(sequence(1, greatest(size(words) - 2, 1)), 1, greatest(size(words) - 2, 0)),
-             i -> xxhash64(concat_ws(' ', slice(words, i, 3)))))""").as("shs"))
+        s"array_distinct(${wordGrams("words", 3, GramKey.XxHash64)})").as("shs"))
       .select(col("doc_id"), size(col("shs")).cast("long").as("n"),
         explode(col("shs")).as("sh"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      .pipe(persistTracked)
     val x = shingled.select(col("doc_id").as("da"), col("n").as("na"), col("sh"))
     val y = shingled.select(col("doc_id").as("db"), col("n").as("nb"), col("sh"))
     x.join(y, "sh")
@@ -156,7 +157,7 @@ object Dedup {
         col("shared").cast("double") / (col("na") + col("nb") - col("shared")))
       .filter(col("jaccard") >= 0.5)
       .select("da", "db", "shared", "jaccard")
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      .pipe(persistTracked)
   }
 
   val d03_ngram_jaccard: Q = (s, d) => verifiedPairs(s, d).orderBy("da", "db")
@@ -242,9 +243,7 @@ object Dedup {
     val shingleSets = docs
       .select(col("doc_id"), split(col("text"), " ").as("words"))
       .select(col("doc_id"), expr(
-        """array_distinct(transform(
-             slice(sequence(1, greatest(size(words) - 2, 1)), 1, greatest(size(words) - 2, 0)),
-             i -> xxhash64(concat_ws(' ', slice(words, i, 3)))))""").as("shs"))
+        s"array_distinct(${wordGrams("words", 3, GramKey.XxHash64)})").as("shs"))
     cand
       .join(shingleSets.select(col("doc_id").as("da"), col("shs").as("sa")), "da")
       .join(shingleSets.select(col("doc_id").as("db"), col("shs").as("sb")), "db")

@@ -3,6 +3,7 @@ package graft.operators
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.Tables
+import graft.api.GraftOps.{GramKey, wordGrams}
 
 /** Dedup family, part 3: prefix-filtered exact similarity join — the
   * AllPairs/PPJoin candidate-pruning technique (Bayardo et al. 2007,
@@ -37,9 +38,7 @@ object Dedup3 {
     graft.api.GraftOps.spreadNarrowScan(docs)
       .select(col("doc_id"), split(col("text"), " ").as("words"))
       .select(col("doc_id"), expr(
-        """array_sort(array_distinct(transform(
-             slice(sequence(1, greatest(size(words) - 2, 1)), 1, greatest(size(words) - 2, 0)),
-             i -> xxhash64(concat_ws(' ', slice(words, i, 3))))))""").as("sh"))
+        s"array_sort(array_distinct(${wordGrams("words", 3, GramKey.XxHash64)}))").as("sh"))
       .withColumn("n", size(col("sh")))
 
   /** Exact Jaccard-verified pairs at `t`, PPJoin-pruned: columns
@@ -147,9 +146,7 @@ object Dedup3 {
     val grams = graft.api.GraftOps.spreadNarrowScan(Tables.documents(s, d))
       .select(col("doc_id"), split(col("text"), " ").as("w"))
       .select(col("doc_id"), explode(expr(
-        """array_distinct(transform(
-             slice(sequence(1, greatest(size(w) - 4, 1)), 1, greatest(size(w) - 4, 0)),
-             i -> unhex(md5(concat_ws(' ', slice(w, i, 5))))))""")).as("g"))
+        s"array_distinct(${wordGrams("w", 5, GramKey.Md5)})")).as("g"))
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     // r13 (the t46 restructure, complement form): a doc's SHARED gram
     // count is n_grams − n_unique, and a df=1 gram's sole owner is
@@ -337,9 +334,7 @@ object Dedup3 {
     val idx = graft.api.GraftOps.spreadNarrowScan(Tables.documents(s, d))
       .select(col("source"), split(col("text"), " ").as("w"))
       .select(col("source"), explode(expr(
-        """array_distinct(transform(
-             slice(sequence(1, greatest(size(w) - 4, 1)), 1, greatest(size(w) - 4, 0)),
-             i -> unhex(md5(concat_ws(' ', slice(w, i, 5))))))""")).as("g"))
+        s"array_distinct(${wordGrams("w", 5, GramKey.Md5)})")).as("g"))
       .distinct()
     idx.as("x")
       .join(idx.as("y"), col("x.g") === col("y.g") && col("x.source") < col("y.source"))

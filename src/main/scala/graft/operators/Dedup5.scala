@@ -3,6 +3,7 @@ package graft.operators
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.Tables
+import graft.api.GraftOps.{GramKey, wordGrams}
 
 /** Dedup family, part 5: weighted similarity. */
 object Dedup5 {
@@ -43,9 +44,7 @@ object Dedup5 {
     val sh = graft.api.GraftOps.spreadNarrowScan(docs)
       .select(col("doc_id"), split(col("text"), " ").as("words"))
       .select(col("doc_id"), expr(
-        """array_distinct(transform(
-             slice(sequence(1, greatest(size(words) - 2, 1)), 1, greatest(size(words) - 2, 0)),
-             i -> concat_ws(' ', slice(words, i, 3))))""").as("shs"))
+        s"array_distinct(${wordGrams("words", 3, GramKey.Text)})").as("shs"))
       // explode_outer, NOT explode (the m09 lesson): explode makes
       // InferFiltersFromGenerate re-run the 3-gram concat transform as a
       // scan-side Filter, serial on a one-row-group corpus. Docs of >= 3
@@ -148,8 +147,7 @@ object Dedup5 {
     val sh = graft.api.GraftOps.spreadNarrowScan(Tables.documents(s, d))
       .select(col("doc_id"), split(col("text"), " ").as("words"))
       .select(col("doc_id"), explode(expr(
-        """array_distinct(transform(slice(sequence(1, greatest(size(words) - 2, 1)), 1, greatest(size(words) - 2, 0)),
-             i -> concat_ws(' ', slice(words, i, 3))))""")).as("sh"))
+        s"array_distinct(${wordGrams("words", 3, GramKey.Text)})")).as("sh"))
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     // 16 seeded minhashes, SQL-expressible: min over md5(seed || shingle).
     // Computed as ONE wide aggregate (16 min columns) instead of a 16x
@@ -499,9 +497,7 @@ object Dedup5 {
       val sh = graft.api.GraftOps.spreadNarrowScan(Tables.documents(s, d))
         .select(col("doc_id"), split(col("text"), " ").as("words"))
         .select(col("doc_id"), explode(expr(
-          s"""array_distinct(transform(
-               slice(sequence(1, greatest(size(words) - ${n - 1}, 1)), 1, greatest(size(words) - ${n - 1}, 0)),
-               i -> concat_ws(' ', slice(words, i, $n))))""")).as("sh"))
+          s"array_distinct(${wordGrams("words", n, GramKey.Text)})")).as("sh"))
       val sized = sh.groupBy("doc_id").agg(count(lit(1)).as("nsh"))
       val x = sh.join(sized, "doc_id")
         .select(col("doc_id").as("da"), col("nsh").as("na"), col("sh"))
@@ -596,8 +592,7 @@ object Dedup5 {
     val sh = graft.api.GraftOps.spreadNarrowScan(Tables.documents(s, d))
       .select(col("doc_id"), split(col("text"), " ").as("words"))
       .select(col("doc_id"), expr(
-        """array_distinct(transform(slice(sequence(1, greatest(size(words) - 2, 1)), 1, greatest(size(words) - 2, 0)),
-             i -> concat_ws(' ', slice(words, i, 3))))""").as("shs"))
+        s"array_distinct(${wordGrams("words", 3, GramKey.Text)})").as("shs"))
       // explode_outer, NOT explode (the m09 lesson): explode makes
       // InferFiltersFromGenerate re-run the whole shingle transform as a
       // scan-side Filter below the repartition, serial on a one-row-group
@@ -932,9 +927,7 @@ object Dedup5 {
     val shingled = Tables.documents(s, d)
       .select(col("doc_id"), split(col("text"), " ").as("words"))
       .select(col("doc_id"), explode(expr(
-        """array_distinct(transform(
-             slice(sequence(1, greatest(size(words) - 2, 1)), 1, greatest(size(words) - 2, 0)),
-             i -> xxhash64(concat_ws(' ', slice(words, i, 3)))))""")).as("sh"))
+        s"array_distinct(${wordGrams("words", 3, GramKey.XxHash64)})")).as("sh"))
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     val est = shingled.groupBy("sh").agg(count(lit(1)).as("df"))
       .agg(count(lit(1)).as("n_grams"),
@@ -1000,9 +993,7 @@ object Dedup5 {
     val dfs = Tables.documents(s, d)
       .select(col("doc_id"), split(col("text"), " ").as("words"))
       .select(col("doc_id"), explode(expr(
-        """array_distinct(transform(
-             slice(sequence(1, greatest(size(words) - 2, 1)), 1, greatest(size(words) - 2, 0)),
-             i -> xxhash64(concat_ws(' ', slice(words, i, 3)))))""")).as("sh"))
+        s"array_distinct(${wordGrams("words", 3, GramKey.XxHash64)})")).as("sh"))
       .groupBy("sh").agg(count(lit(1)).as("df"))
     val buckets = dfs
       .withColumn("bucket", floor(log2(col("df"))).cast("long"))

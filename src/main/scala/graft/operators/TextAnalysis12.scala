@@ -3,6 +3,7 @@ package graft.operators
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.Tables
+import graft.api.GraftOps.{GramKey, wordGrams}
 
 /** Round 13: corpus novelty accounting — the curve a crawl/ingest
   * pipeline watches to decide when a source is EXHAUSTED (novelty per
@@ -36,9 +37,7 @@ object TextAnalysis12 {
     val sh = docs
       .select(col("doc_id"), split(col("text"), " ").as("words"))
       .select(col("doc_id"),
-        explode(expr("""array_distinct(transform(
-            slice(sequence(1, greatest(size(words) - 2, 1)), 1, greatest(size(words) - 2, 0)),
-            i -> concat_ws(' ', slice(words, i, 3))))"""))
+        explode(expr(s"array_distinct(${wordGrams("words", 3, GramKey.Text)})"))
           .as("sh"))
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     val first = sh.groupBy("sh").agg(min("doc_id").as("first_doc"))

@@ -3,6 +3,7 @@ package graft.operators
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.Tables
+import graft.api.GraftOps.{GramKey, wordGrams}
 
 /** Text analysis, part 2: PII redaction and repetition filtering — both
   * per-row narrow maps (no shuffle; scale linearly with input bytes).
@@ -58,15 +59,10 @@ object TextAnalysis2 {
   // no explode, no shuffle; the standard pre-training repetition filters
   // (Rae et al. 2021 "Gopher" §A1.2) at 100 TB cost = one scan.
   val t07_repetition: Q = (s, d) => {
-    val grams = (k: Int) =>
-      s"""CASE WHEN size(words) >= $k THEN
-            transform(sequence(1, size(words) - ${k - 1}),
-                      i -> concat_ws(' ', slice(words, i, $k)))
-          ELSE array() END"""
     Tables.documents(s, d)
       .select(col("doc_id"), split(col("text"), " ").as("words"))
-      .withColumn("g2", expr(grams(2)))
-      .withColumn("g3", expr(grams(3)))
+      .withColumn("g2", expr(wordGrams("words", 2, GramKey.Text)))
+      .withColumn("g3", expr(wordGrams("words", 3, GramKey.Text)))
       .select(
         col("doc_id"),
         size(col("words")).cast("long").as("n_words"),

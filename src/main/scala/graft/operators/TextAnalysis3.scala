@@ -3,6 +3,7 @@ package graft.operators
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.Tables
+import graft.api.GraftOps.{GramKey, gramPositions, wordGrams}
 
 /** Text analysis, part 3: statistical language-model scoring.
   */
@@ -26,7 +27,7 @@ object TextAnalysis3 {
     val bigrams = graft.api.GraftOps.spreadNarrowScan(Tables.documents(s, d))
       .select(col("doc_id"), split(col("text"), " ").as("w"))
       .select(col("doc_id"), explode(expr(
-        "transform(sequence(1, size(w) - 1), i -> struct(w[i-1] AS w1, w[i] AS w2))"))
+        s"transform(${gramPositions("w", 2)}, i -> struct(w[i-1] AS w1, w[i] AS w2))"))
         .as("b"))
       .select(col("doc_id"), col("b.w1"), col("b.w2"))
       // persisted: the two count aggregations and the probe side are
@@ -128,9 +129,7 @@ object TextAnalysis3 {
     def grams(df: DataFrame) = df
       .select(col("doc_id"), split(col("text"), " ").as("w"))
       .select(col("doc_id"), explode(expr(
-        """array_distinct(transform(
-             slice(sequence(1, greatest(size(w) - 7, 1)), 1, greatest(size(w) - 7, 0)),
-             i -> unhex(md5(concat_ws(' ', slice(w, i, 8))))))""")).as("g"))
+        s"array_distinct(${wordGrams("w", 8, GramKey.Md5)})")).as("g"))
     val docs = Tables.documents(s, d)
     val evalIdx = grams(docs.filter(col("doc_id") % 10 === 0))
       .select("g").distinct()

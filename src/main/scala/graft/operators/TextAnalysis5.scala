@@ -4,6 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import graft.{Stable, Tables}
+import graft.api.GraftOps.{GramKey, wordGrams}
 
 /** Text analysis, part 5: corpus-level statistical modeling. */
 object TextAnalysis5 {
@@ -74,9 +75,7 @@ object TextAnalysis5 {
     val grams = graft.api.GraftOps.spreadNarrowScan(Tables.documents(s, d))
       .select(col("doc_id"), split(col("text"), " ").as("w"))
       .select(col("doc_id"), explode(expr(
-        """array_distinct(transform(
-             slice(sequence(1, greatest(size(w) - 3, 1)), 1, greatest(size(w) - 3, 0)),
-             i -> unhex(md5(concat_ws(' ', slice(w, i, 4))))))""")).as("g"))
+        s"array_distinct(${wordGrams("w", 4, GramKey.Md5)})")).as("g"))
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     val nNovel = grams.groupBy("g").agg(min("doc_id").as("first_doc"))
       .groupBy(col("first_doc").as("doc_id"))

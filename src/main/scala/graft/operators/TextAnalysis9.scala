@@ -3,6 +3,7 @@ package graft.operators
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.Tables
+import graft.api.GraftOps.{GramKey, gramPositions, wordGrams}
 
 /** Text analysis, part 9: corpus-level collocation mining. */
 object TextAnalysis9 {
@@ -32,7 +33,7 @@ object TextAnalysis9 {
       .groupBy("word").agg(count(lit(1)).as("nw"))
     val bi = toks
       .select(explode(expr(
-        "transform(sequence(1, size(w) - 1), i -> struct(w[i-1] AS w1, w[i] AS w2))"))
+        s"transform(${gramPositions("w", 2)}, i -> struct(w[i-1] AS w1, w[i] AS w2))"))
         .as("b"))
       .groupBy(col("b.w1").as("w1"), col("b.w2").as("w2"))
       .agg(count(lit(1)).as("n12"))
@@ -137,8 +138,7 @@ object TextAnalysis9 {
       .select(col("doc_id"), col("source"), split(col("text"), " ").as("w"))
       .filter(size(col("w")) >= 8)
       .select(col("doc_id"), col("source"), explode(expr(
-        """array_distinct(transform(sequence(1, size(w) - 7),
-             i -> unhex(md5(array_join(slice(w, i, 8), ' ')))))""")).as("g"))
+        s"array_distinct(${wordGrams("w", 8, GramKey.Md5)})")).as("g"))
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     val nUnique = grams.groupBy("source", "g")
       .agg(count(lit(1)).as("df"), min("doc_id").as("owner"))
@@ -374,7 +374,7 @@ object TextAnalysis9 {
     val bigrams = graft.api.GraftOps.spreadNarrowScan(Tables.documents(s, d))
       .select(col("doc_id"), col("source"), split(col("text"), " ").as("w"))
       .select(col("doc_id"), col("source"), explode(expr(
-        "transform(sequence(1, size(w) - 1), i -> struct(w[i-1] AS w1, w[i] AS w2))"))
+        s"transform(${gramPositions("w", 2)}, i -> struct(w[i-1] AS w1, w[i] AS w2))"))
         .as("b"))
       .select(col("doc_id"), col("source"), col("b.w1"), col("b.w2"))
       .persist(StorageLevel.MEMORY_AND_DISK)
@@ -546,7 +546,7 @@ object TextAnalysis9 {
     val bigrams = Tables.documents(s, d)
       .select(col("source"), split(col("text"), " ").as("w"))
       .select(col("source"), explode(expr(
-        "transform(sequence(1, size(w) - 1), i -> struct(w[i-1] AS w1, w[i] AS w2))"))
+        s"transform(${gramPositions("w", 2)}, i -> struct(w[i-1] AS w1, w[i] AS w2))"))
         .as("b"))
       .select(col("source"), col("b.w1"), col("b.w2"))
     val c2 = bigrams.groupBy("source", "w1", "w2")

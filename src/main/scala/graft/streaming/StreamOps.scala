@@ -3,6 +3,7 @@ package graft.streaming
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
+import graft.api.GraftOps.{GramKey, bandKeys, wordGrams}
 
 /** Structured Streaming variants of the event-analytics operators.
   *
@@ -588,15 +589,10 @@ object StreamOps {
     val banded = spark.readStream.schema(graft.Tables.schemas("documents")).parquet(s"$dir/documents*")
       .select(col("doc_id"),
         graft.functions.minhash_signature(col("text"), numHashes, 3).as("sig"),
-        expr("""array_sort(array_distinct(transform(
-             slice(sequence(1, greatest(size(split(text, ' ')) - 2, 1)), 1, greatest(size(split(text, ' ')) - 2, 0)),
-             i -> xxhash64(concat_ws(' ', slice(split(text, ' '), i, 3))))))""")
+        expr(s"array_sort(array_distinct(${wordGrams("split(text, ' ')", 3, GramKey.XxHash64)}))")
           .as("shs"))
-      .select(explode(expr(
-        s"""transform(sequence(0, ${bands - 1}), b ->
-            struct(b AS band,
-                   xxhash64(concat_ws(',', slice(sig, b * $r + 1, $r))) AS bh))"""))
-        .as("bk"), col("doc_id"), col("sig"), col("shs"))
+      .select(explode(expr(bandKeys("sig", bands, r))).as("bk"),
+        col("doc_id"), col("sig"), col("shs"))
       .select(col("bk.band").as("band"), col("bk.bh").as("bh"),
         col("doc_id"), col("sig"), col("shs"))
       .as[BandMember]
@@ -687,16 +683,11 @@ object StreamOps {
       .select(col(idCol).as("doc_id"),
         graft.functions.minhash_signature(col(textCol), numHashes, 3)
           .as("sig"),
-        expr(s"""array_sort(array_distinct(transform(
-             slice(sequence(1, greatest(size(split(`$textCol`, ' ')) - 2, 1)), 1, greatest(size(split(`$textCol`, ' ')) - 2, 0)),
-             i -> xxhash64(concat_ws(' ', slice(split(`$textCol`, ' '), i, 3))))))""")
+        expr(s"array_sort(array_distinct(${wordGrams(s"split(`$textCol`, ' ')", 3, GramKey.XxHash64)}))")
           .as("shs"),
         col(tsCol).as("ts"))
-      .select(explode(expr(
-        s"""transform(sequence(0, ${bands - 1}), b ->
-            struct(b AS band,
-                   xxhash64(concat_ws(',', slice(sig, b * $r + 1, $r))) AS bh))"""))
-        .as("bk"), col("doc_id"), col("sig"), col("shs"), col("ts"))
+      .select(explode(expr(bandKeys("sig", bands, r))).as("bk"),
+        col("doc_id"), col("sig"), col("shs"), col("ts"))
       .select(col("bk.band").as("band"), col("bk.bh").as("bh"),
         col("doc_id"), col("sig"), col("shs"), col("ts"))
       .as[BandMemberT]

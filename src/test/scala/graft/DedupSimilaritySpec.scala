@@ -103,13 +103,20 @@ class DedupSimilaritySpec extends AnyFunSuite {
     // no clearCache(): GraftOps.releaseCaches alone must free every
     // intermediate these operators persist
     def persisted = spark.sparkContext.getPersistentRDDs.keySet
+    // d03's pair table is shared by plan: drop an earlier test's copy so
+    // this run persists its own instead of reusing that one
+    spark.catalog.clearCache()
     val before = persisted
     operators.Multimodal3.m09_asset_neardup(spark, sf).collect()
+    operators.Dedup.d03_ngram_jaccard(spark, sf).collect()
     spark.conf.set("graft.neardup.strategy", "lsh")
-    try operators.Multimodal3.m09_asset_neardup(spark, sf).collect()
-    finally spark.conf.unset("graft.neardup.strategy")
+    try {
+      operators.Multimodal3.m09_asset_neardup(spark, sf).collect()
+      operators.Dedup.d03_ngram_jaccard(spark, sf).collect()
+    } finally spark.conf.unset("graft.neardup.strategy")
     operators.Multimodal3.m18_chunk_tuning(spark, sf).collect()
-    assert((persisted -- before).size >= 3, "expected m09 x2 and m18 to cache")
+    assert((persisted -- before).size >= 6,
+      "expected m09 x2, d03 (shingle route x2, lsh route) and m18 to cache")
     api.GraftOps.releaseCaches()
     assert((persisted -- before).isEmpty,
       s"caches left after releaseCaches: ${persisted -- before}")
