@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Benchmark main: one JSON line with wall times at the sf dir given by
   * SPARK_GRAFT_SF_DIR. A warmup pass (flagship query + one scan per table)
   * absorbs JVM/codegen/session initialization so the per-query numbers
@@ -30,47 +28,11 @@ object Bench {
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
     // Optional comma-separated subset for targeted optimization loops
     // (skips the full-suite warmup+run); full bench when unset.
     val only = sys.env.get("SPARK_GRAFT_ONLY")
       .map(_.split(",").map(_.trim).toSet)
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      // explicit (it's the Spark default) because it's load-bearing for
-      // the 100 TB story: fact-fact joins rely on AQE's runtime skew
-      // split; PlanAuditSpec pins both flags as a regression test
-      .config("spark.sql.adaptive.skewJoin.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      // r13 (guide §5): Spark frees shuffle files, broadcast blocks and
-      // map-output state via ContextCleaner WEAK references — nothing is
-      // reclaimed until a JVM GC runs, and the default periodic-GC
-      // backstop (spark.cleaner.periodicGC.interval) is 30 MIN, longer
-      // than this whole bench. 369 queries × 3 runs accumulate thousands
-      // of dead shuffles/broadcasts; measured effect: driver-bound
-      // fixpoint queries mid-suite read 5–18× their exclusive-run time
-      // (g18 13.4 s in-suite vs 0.75 s isolated) and the suite total
-      // carried ~30–60 s of pure accumulation tax. A 90 s backstop plus
-      // the deterministic between-queries GC below (outside every timed
-      // region) removes it; at production scale the same conf is the
-      // standing recommendation for long-lived multi-query drivers.
-      .config("spark.cleaner.periodicGC.interval", "90s")
-      .getOrCreate()
-    // ERROR, not WARN: the driver parses ONE JSON line from stdout, and
-    // log4j noise (src/main/resources/log4j2.properties routes it to
-    // stderr as a second line of defense) must never reach it.
-    spark.sparkContext.setLogLevel("ERROR")
-    // targeted-loop escape hatch: SPARK_GRAFT_CONF="k=v,k2=v2" sets
-    // session confs (e.g. graft.neardup.strategy=lsh) so alternate
-    // operating points measure through the same rig
-    sys.env.get("SPARK_GRAFT_CONF").foreach(_.split(",")
-      .filter(_.contains("=")).foreach { kv =>
-        val Array(k, v) = kv.split("=", 2)
-        spark.conf.set(k.trim, v.trim)
-      })
+    val spark = Session()
 
     // warmup: table footers/caches, then every query once at the smallest
     // scale factor — Janino/whole-stage compilation is per-plan-shape, so
@@ -88,7 +50,7 @@ object Bench {
     // warmup runs persist sf0.001-plan caches that no sf-dir query will
     // ever hit — drop them before the timed runs start. The GC frees the
     // warmup pass's accumulated shuffle/broadcast state (see the
-    // periodicGC note above) so the artifact build doesn't inherit it.
+    // periodicGC note in Session) so the artifact build doesn't inherit it.
     spark.catalog.clearCache()
     System.gc()
 

@@ -1,17 +1,11 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Driver-contract smoke: run the flagship SparkEntry.entry and print
   * the row count (the driver checks rows > 0). `runMain graft.EntrySmoke`.
   */
 object EntrySmoke {
   def main(args: Array[String]): Unit = {
-    val spark = SparkSession.builder().master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false").getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = Session()
     val n = SparkEntry.entry(spark).count()
     println(s"ENTRY_SMOKE rows=$n nonEmpty=${n > 0}")
     spark.stop()

@@ -501,20 +501,12 @@ object ScaleStress {
   }
 
   def main(args: Array[String]): Unit = {
-    val spark = SparkSession.builder()
-      .master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      // the stress set is ~20 files/table: at the default 128 MB split
-      // packing a 210 MB table scans as ~3 input partitions — 3 of 32
-      // cores on the fact-scale first stage. 16 MB splits restore the
-      // many-files/many-splits shape a real cluster sees.
-      .config("spark.sql.files.maxPartitionBytes", "16m")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.adaptive.skewJoin.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = Session()
+    // the stress set is ~20 files/table: at the default 128 MB split
+    // packing a 210 MB table scans as ~3 input partitions — 3 of 32
+    // cores on the fact-scale first stage. 16 MB splits restore the
+    // many-files/many-splits shape a real cluster sees.
+    spark.conf.set("spark.sql.files.maxPartitionBytes", "16m")
     if (args.headOption.contains("formats")) {
       build(spark) // the 10x events table feeds the DeltaSync row
       formatStress(spark)

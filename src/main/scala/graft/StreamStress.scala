@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** Streaming scale-stress harness: drives the Structured Streaming
@@ -21,15 +20,8 @@ import org.apache.spark.sql.functions._
   */
 object StreamStress {
   def main(args: Array[String]): Unit = {
-    val spark = SparkSession.builder()
-      .master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.files.maxPartitionBytes", "16m")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = Session()
+    spark.conf.set("spark.sql.files.maxPartitionBytes", "16m")
     ScaleStress.ensureBuilt(spark)
 
     val dirs = Seq("1x" -> "/root/testdata/sf0.1", "10x" -> "target/stress")

@@ -212,6 +212,19 @@ object GraftOps {
       .distinct()
   }
 
+  /** Jaccard of two sets from their sizes and overlap:
+    * shared / (na + nb - shared). Two empty sets give NULL, not a
+    * division by zero under ANSI, and NULL fails every `>=` threshold;
+    * twin docs too short for one word gram get there through LSH, whose
+    * signature counts a short doc as one gram. The denominator is
+    * NULLIF(union, 0) spelled as CASE: Spark's `nullif` rewrites into a
+    * `With` that adds a Project node to every plan it appears in.
+    */
+  private[graft] def jaccard(shared: Column, na: Column, nb: Column): Column = {
+    val union = na + nb - shared
+    shared.cast("double") / when(union =!= 0, union)
+  }
+
   /** Exact word-n-gram Jaccard similarity join: candidates from shared
     * shingles, verified with exact set overlap. Returns
     * (id_a, id_b, shared, jaccard) for pairs with jaccard >= threshold.
@@ -248,8 +261,7 @@ object GraftOps {
       .where(col("id_a") < col("id_b"))
       .groupBy("id_a", "id_b", "__na", "__nb")
       .agg(count(lit(1)).as("shared"))
-      .withColumn("jaccard",
-        col("shared").cast("double") / (col("__na") + col("__nb") - col("shared")))
+      .withColumn("jaccard", jaccard(col("shared"), col("__na"), col("__nb")))
       .filter(col("jaccard") >= threshold)
       .select("id_a", "id_b", "shared", "jaccard")
   }
@@ -283,8 +295,7 @@ object GraftOps {
       .join(sets.select(col("__id").as("id_b"), col("__shs").as("__sb"),
         col("__n").as("__nb")), "id_b")
       .withColumn("shared", size(array_intersect(col("__sa"), col("__sb"))).cast("long"))
-      .withColumn("jaccard",
-        col("shared").cast("double") / (col("__na") + col("__nb") - col("shared")))
+      .withColumn("jaccard", jaccard(col("shared"), col("__na"), col("__nb")))
       .filter(col("jaccard") >= threshold)
       .select("id_a", "id_b", "shared", "jaccard")
   }
@@ -338,8 +349,7 @@ object GraftOps {
         col("__n").as("__nb")), "id_b")
       .withColumn("shared",
         size(array_intersect(col("__sa"), col("__sb"))).cast("long"))
-      .withColumn("jaccard",
-        col("shared").cast("double") / (col("__na") + col("__nb") - col("shared")))
+      .withColumn("jaccard", jaccard(col("shared"), col("__na"), col("__nb")))
       .filter(col("jaccard") >= threshold)
       .select("id_a", "id_b", "shared", "jaccard")
   }
@@ -1611,8 +1621,7 @@ object GraftOps {
       .where(col("id_a") < col("id_b"))
       .groupBy("id_a", "id_b", "na", "nb")
       .agg(count(lit(1)).as("shared"))
-      .withColumn("jaccard",
-        col("shared").cast("double") / (col("na") + col("nb") - col("shared")))
+      .withColumn("jaccard", jaccard(col("shared"), col("na"), col("nb")))
       .filter(col("jaccard") >= threshold)
       .select("id_a", "id_b", "shared", "jaccard")
       .pipe(persistTracked)

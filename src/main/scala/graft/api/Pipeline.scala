@@ -37,35 +37,29 @@ final case class Pipeline(stages: Vector[(String, DataFrame => DataFrame)]) {
     * zero extra passes over the data, works at any scale (unlike
     * `profile`, which re-runs the plan per stage).
     *
-    * Metrics are harvested with a QueryExecutionListener (the documented
-    * batch-observe pattern), so they materialize for ANY action on the
-    * returned frame — count, write, collect — including actions that wrap
-    * the plan in a fresh QueryExecution. Listener delivery is async;
-    * `metrics()` polls briefly before returning what has arrived.
+    * One `Observation` per stage: the session's own observation manager
+    * completes it for ANY action on the returned frame — count, write,
+    * collect — including actions that wrap the plan in a fresh
+    * QueryExecution, and no listener is added per call. Delivery is
+    * async; `metrics()` waits up to 5 s in all, then returns the stages
+    * that have arrived.
     */
   def runObserved(input: DataFrame): (DataFrame, () => Map[String, Long]) = {
+    import org.apache.spark.sql.Observation
     import org.apache.spark.sql.functions.{count, lit}
-    val spark = input.sparkSession
-    val acc = new java.util.concurrent.ConcurrentHashMap[String, Long]()
-    val listener = new org.apache.spark.sql.util.QueryExecutionListener {
-      override def onSuccess(funcName: String,
-          qe: org.apache.spark.sql.execution.QueryExecution, durationNs: Long): Unit =
-        qe.observedMetrics.foreach { case (k, row) =>
-          if (k.startsWith("stage:")) acc.put(k, row.getLong(0))
-        }
-      override def onFailure(funcName: String,
-          qe: org.apache.spark.sql.execution.QueryExecution, e: Exception): Unit = ()
-    }
-    spark.listenerManager.register(listener)
-    val out = stages.foldLeft(input) { case (df, (name, f)) =>
-      f(df).observe(s"stage:$name", count(lit(1)).as("rows"))
+    import scala.concurrent.{Await, TimeoutException}
+    import scala.concurrent.duration._
+    val observed = stages.map { case (name, f) => (s"stage:$name", f, Observation()) }
+    val out = observed.foldLeft(input) { case (df, (_, f, obs)) =>
+      f(df).observe(obs, count(lit(1)).as("rows"))
     }
     val metrics = () => {
-      val deadline = System.nanoTime() + 5L * 1000 * 1000 * 1000
-      while (acc.size() < stages.size && System.nanoTime() < deadline)
-        Thread.sleep(50)
-      import scala.jdk.CollectionConverters._
-      acc.asScala.toMap
+      val deadline = 5.seconds.fromNow
+      observed.flatMap { case (key, _, obs) =>
+        try Some(key -> Await.result(obs.future, deadline.timeLeft.max(Duration.Zero))
+          .getLong(0))
+        catch { case _: TimeoutException => None }
+      }.toMap
     }
     (out, metrics)
   }

@@ -4,7 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.Tables
 import graft.functions.{minhash_signature, simhash64}
-import graft.api.GraftOps.{GramKey, persistTracked, wordGrams}
+import graft.api.GraftOps.{GramKey, jaccard, persistTracked, wordGrams}
 import scala.util.chaining._
 
 /** Training-data dedup family — SURVEY.md §2.
@@ -153,8 +153,7 @@ object Dedup {
       .where(col("da") < col("db"))
       .groupBy("da", "db", "na", "nb")
       .agg(count(lit(1)).as("shared"))
-      .withColumn("jaccard",
-        col("shared").cast("double") / (col("na") + col("nb") - col("shared")))
+      .withColumn("jaccard", jaccard(col("shared"), col("na"), col("nb")))
       .filter(col("jaccard") >= 0.5)
       .select("da", "db", "shared", "jaccard")
       .pipe(persistTracked)
@@ -248,9 +247,7 @@ object Dedup {
       .join(shingleSets.select(col("doc_id").as("da"), col("shs").as("sa")), "da")
       .join(shingleSets.select(col("doc_id").as("db"), col("shs").as("sb")), "db")
       .withColumn("shared", expr("CAST(size(array_intersect(sa, sb)) AS BIGINT)"))
-      .withColumn("jaccard",
-        col("shared").cast("double") /
-          (expr("size(sa)") + expr("size(sb)") - col("shared")))
+      .withColumn("jaccard", jaccard(col("shared"), expr("size(sa)"), expr("size(sb)")))
       .filter(col("jaccard") >= 0.5)
       .select("da", "db", "shared", "jaccard")
       .orderBy("da", "db")

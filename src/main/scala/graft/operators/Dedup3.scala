@@ -3,7 +3,7 @@ package graft.operators
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.Tables
-import graft.api.GraftOps.{GramKey, wordGrams}
+import graft.api.GraftOps.{GramKey, jaccard, wordGrams}
 
 /** Dedup family, part 3: prefix-filtered exact similarity join — the
   * AllPairs/PPJoin candidate-pruning technique (Bayardo et al. 2007,
@@ -104,8 +104,7 @@ object Dedup3 {
       .join(sets.select(col("doc_id").as("da"), col("sh").as("sha"), col("n").as("na")), "da")
       .join(sets.select(col("doc_id").as("db"), col("sh").as("shb"), col("n").as("nb")), "db")
       .withColumn("shared", size(array_intersect(col("sha"), col("shb"))).cast("long"))
-      .withColumn("jaccard",
-        col("shared").cast("double") / (col("na") + col("nb") - col("shared")))
+      .withColumn("jaccard", jaccard(col("shared"), col("na"), col("nb")))
       .filter(col("jaccard") >= t)
       .select("da", "db", "shared", "jaccard")
   }

@@ -3,7 +3,7 @@ package graft.operators
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.Tables
-import graft.api.GraftOps.{GramKey, wordGrams}
+import graft.api.GraftOps.{GramKey, jaccard, wordGrams}
 
 /** Dedup family, part 5: weighted similarity. */
 object Dedup5 {
@@ -194,8 +194,7 @@ object Dedup5 {
         .groupBy("da", "db").agg(count(lit(1)).as("shared"))
         .join(sizes.select(col("doc_id").as("da"), col("n").as("na")), "da")
         .join(sizes.select(col("doc_id").as("db"), col("n").as("nb")), "db")
-        .where(col("shared").cast("double")
-          / (col("na") + col("nb") - col("shared")) >= 0.5)
+        .where(jaccard(col("shared"), col("na"), col("nb")) >= 0.5)
         .select("da", "db")
     }
     val hits = cands.join(truth, Seq("da", "db"))
@@ -506,8 +505,7 @@ object Dedup5 {
       x.join(y, "sh").where(col("da") < col("db"))
         .groupBy("da", "db", "na", "nb")
         .agg(count(lit(1)).as("shared"))
-        .filter(col("shared").cast("double")
-          / (col("na") + col("nb") - col("shared")) >= 0.5)
+        .filter(jaccard(col("shared"), col("na"), col("nb")) >= 0.5)
         .select("da", "db")
     }
     def report(n: Int): DataFrame = {
@@ -607,8 +605,7 @@ object Dedup5 {
     val pairs = x.join(y, "sh").where(col("da") < col("db"))
       .groupBy("da", "db", "na", "nb")
       .agg(count(lit(1)).as("shared"))
-      .withColumn("j", col("shared").cast("double")
-        / (col("na") + col("nb") - col("shared")))
+      .withColumn("j", jaccard(col("shared"), col("na"), col("nb")))
       .filter(col("j") >= 0.01)
     val mh = sh.groupBy("doc_id").agg(
       min(md5(concat(lit("0|"), col("sh")))).as("mh0"),

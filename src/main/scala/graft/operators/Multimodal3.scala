@@ -3,6 +3,7 @@ package graft.operators
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.Tables
+import graft.api.GraftOps.jaccard
 import scala.util.chaining._
 
 /** Multimodal plumbing, part 3: content-addressed asset storage. */
@@ -194,8 +195,7 @@ object Multimodal3 {
       .where(col("id_a") < col("id_b"))
       .groupBy("id_a", "id_b", "na", "nb")
       .agg(count(lit(1)).as("shared"))
-      .withColumn("jaccard",
-        col("shared").cast("double") / (col("na") + col("nb") - col("shared")))
+      .withColumn("jaccard", jaccard(col("shared"), col("na"), col("nb")))
       .filter(col("jaccard") >= 0.3)
       .select("id_a", "id_b", "shared", "jaccard")
       .orderBy("id_a", "id_b")

@@ -1,20 +1,12 @@
 package graft.streaming
 
-import org.apache.spark.sql.SparkSession
-
 /** Runnable demo of the streaming ops: drives the file source end-to-end
   * with a memory sink. Usage: runMain graft.streaming.StreamDemo [sfDir]
   */
 object StreamDemo {
   def main(args: Array[String]): Unit = {
     val dir = args.headOption.getOrElse("/root/testdata/sf0.01")
-    val spark = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.Session()
 
     val w = StreamOps.windowedCounts(spark, dir)
       .writeStream.outputMode("append").format("memory").queryName("win").start()

@@ -1,4 +1,4 @@
-package org.apache.spark.graftspec
+package org.apache.spark.graftbridge
 
 import org.apache.spark.SparkContext
 

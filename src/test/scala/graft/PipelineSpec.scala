@@ -2,6 +2,7 @@ package graft
 
 import org.scalatest.funsuite.AnyFunSuite
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graftspec.QueryListeners
 
 class PipelineSpec extends AnyFunSuite {
   import SparkTestSession._
@@ -37,13 +38,19 @@ class PipelineSpec extends AnyFunSuite {
       "tight" -> (df => df.filter(col("o_totalprice") > 300000.0)),
     )
     val input = Tables.orders(spark, sf)
-    val (out, metrics) = p.runObserved(input)
-    out.count() // the single action that also materializes the metrics
-    val m = metrics()
     val expected = p.profile(input).toMap
-    expected.foreach { case (stage, rows) =>
-      assert(m(s"stage:$stage") == rows, s"stage $stage: ${m.get(s"stage:$stage")} vs $rows")
+    // repeated calls leave the session's query-execution listeners as
+    // the first call left them: no listener is added per call
+    val listeners = (1 to 3).map { _ =>
+      val (out, metrics) = p.runObserved(input)
+      out.count() // the single action that also materializes the metrics
+      val m = metrics()
+      expected.foreach { case (stage, rows) =>
+        assert(m(s"stage:$stage") == rows, s"stage $stage: ${m.get(s"stage:$stage")} vs $rows")
+      }
+      QueryListeners.count(spark)
     }
+    assert(listeners.distinct.size == 1, s"listener count per call: $listeners")
   }
 
   test("round-13 operators: novelty curve, ego density, dedup shrinkage hold their invariants") {

@@ -82,6 +82,26 @@ class WordGramSpec extends AnyFunSuite {
       "id_a", "id_b") & shortIds).isEmpty)
     assert((longs(GraftOps.novelty(docs, col("doc_id"), col("text")), "id") &
       shortIds).isEmpty)
+
+    // LSH routes: minhash_signature counts a short doc as one gram, so
+    // each twin collides with its copy in every band, while its word-gram
+    // set is empty; verification must drop the pair, not divide by zero
+    assert((longs(GraftOps.jaccardJoinBanded(docs, col("doc_id"), col("text"), 0.5),
+      "id_a", "id_b") & shortIds).isEmpty)
+    assert((longs(operators.Dedup.d06_lsh_verified(spark, shortDir), "da", "db") &
+      shortIds).isEmpty)
+    spark.conf.set("graft.neardup.strategy", "lsh")
+    try assert((longs(operators.Dedup.d03_ngram_jaccard(spark, shortDir), "da", "db") &
+      shortIds).isEmpty)
+    finally spark.conf.unset("graft.neardup.strategy")
+    locally {
+      import spark.implicits._
+      val sets = Seq((1L, Seq.empty[Long]), (2L, Seq.empty[Long]), (3L, Seq(7L, 8L)),
+        (4L, Seq(7L, 8L))).toDF("id", "sh")
+      val pairs = GraftOps.jaccardJoinBandedSets(sets, col("id"), col("sh"), 0.5)
+        .select("id_a", "id_b").collect().map(r => (r.getLong(0), r.getLong(1)))
+      assert(pairs.toSeq == Seq((3L, 4L)), s"empty sets paired: ${pairs.toSeq}")
+    }
     GraftOps.releaseCaches()
   }
 
