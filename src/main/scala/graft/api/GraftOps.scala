@@ -195,22 +195,13 @@ object GraftOps {
     */
   def minhashCandidates(df: DataFrame, id: Column, text: Column,
                         numHashes: Int = 64, bands: Int = 16,
-                        shingleWords: Int = 3): DataFrame = {
-    val rowsPerBand = numHashes / bands
+                        shingleWords: Int = 3): DataFrame =
     // single-row-group input → single-task signature stage without the
     // spread (see jaccardJoinBandedSets); GATED on scan parallelism so a
     // production many-file corpus pays no exchange (spreadNarrowScan)
-    val sigs = spreadNarrowScan(df)
-      .select(id.as("__id"),
-        minhash_signature(text, numHashes, shingleWords).as("__sig"))
-    val banded = sigs.select(col("__id"), explode(expr(
-      bandKeys("__sig", bands, rowsPerBand))).as("__b"))
-      .select(col("__id"), col("__b.band"), col("__b.bh"))
-    banded.as("x").join(banded.as("y"), Seq("band", "bh"))
-      .where(col("x.__id") < col("y.__id"))
-      .select(col("x.__id").as("id_a"), col("y.__id").as("id_b"))
-      .distinct()
-  }
+    bandCandidates(spreadNarrowScan(df).select(id.as("__id"),
+        minhash_signature(text, numHashes, shingleWords).as("__sig")),
+      bands, numHashes / bands)
 
   /** Jaccard of two sets from their sizes and overlap:
     * shared / (na + nb - shared). Two empty sets give NULL, not a
@@ -225,45 +216,140 @@ object GraftOps {
     shared.cast("double") / when(union =!= 0, union)
   }
 
+  // ---- the near-dup pair pipeline ----------------------------------
+  // Every verified-pair verb is one shape: a shingle set per row, a
+  // candidate generator, and exact Jaccard on the candidates only. The
+  // parts below are that shape's only copies; the generators are
+  // interchangeable in front of the two verifiers (postings count for
+  // the shared-shingle join, sorted-set intersection for the rest).
+
+  /** The one text shingle set: the distinct xxhash64 word `n`-grams of
+    * the array column `words` ([[wordGrams]]). Unsorted.
+    */
+  private[graft] def wordGramSet(words: String, n: Int): Column =
+    expr(s"array_distinct(${wordGrams(words, n, GramKey.XxHash64)})")
+
+  /** (__id, __shs): the gated spread of `df`, then each row's
+    * [[wordGramSet]] over `text` split on ' '. The split is its own
+    * column, so the per-gram lambda slices it instead of re-splitting.
+    */
+  private def textGramSets(df: DataFrame, id: Column, text: Column,
+                           n: Int): DataFrame =
+    spreadNarrowScan(df).select(id.as("__id"), split(text, " ").as("__w"))
+      .select(col("__id"), wordGramSet("__w", n).as("__shs"))
+
+  /** (__id, __shs, __n): each row's set, distinct and sorted, and its
+    * size, over the gated spread of `df`. Not persisted: a caller that
+    * reads it more than once pipes it through [[persistTracked]].
+    * `sort_array`, not `array_sort`: array_sort compares through an
+    * interpreted lambda; on non-null longs both give the same order.
+    */
+  private[graft] def shingleSets(df: DataFrame, id: Column, set: Column): DataFrame =
+    withSize(spreadNarrowScan(df).select(id.as("__id"),
+      sort_array(array_distinct(set)).as("__shs")))
+
+  /** [[shingleSets]] of the word `n`-gram text set ([[textGramSets]]:
+    * already distinct, so only sorted here).
+    */
+  private[graft] def textShingleSets(df: DataFrame, id: Column, text: Column,
+                                     n: Int): DataFrame =
+    withSize(textGramSets(df, id, text, n)
+      .select(col("__id"), sort_array(col("__shs")).as("__shs")))
+
+  private def withSize(sets: DataFrame): DataFrame =
+    sets.withColumn("__n", size(col("__shs")).cast("long"))
+
+  /** (__id, __n, __sh) postings of a (__id, __shs) set table: one row per
+    * element, the set size computed narrowly before the explode and
+    * carried through the pair join (no sizes aggregation afterwards).
+    * explode_outer, NOT explode (the m09 lesson, guide §7.2): explode
+    * lets InferFiltersFromGenerate add `size(__shs) > 0`, and pushdown
+    * re-runs the WHOLE per-gram hash pass as a scan-side Filter below
+    * the spread — serial on a one-row-group corpus, then computed AGAIN
+    * above the exchange. An empty set yields one null-gram row, which
+    * the null-rejecting equi-join in [[postingsPairs]] drops.
+    */
+  private[graft] def postings(sets: DataFrame): DataFrame =
+    sets.select(col("__id"), size(col("__shs")).cast("long").as("__n"),
+      explode_outer(col("__shs")).as("__sh"))
+
+  /** The shared-shingle generator and its verifier in one: self-join of
+    * two (__id, __n, __sh) posting tables on the shingle, count per
+    * pair, [[jaccard]] >= `threshold`. Exact at any threshold; a hot
+    * shingle of document frequency df costs O(df²) join rows.
+    * Returns (id_a, id_b, shared, jaccard), id_a < id_b.
+    */
+  private[graft] def postingsPairs(x: DataFrame, y: DataFrame,
+                                   threshold: Double): DataFrame =
+    jaccardAtLeast(x.select(col("__id").as("id_a"), col("__n").as("__na"), col("__sh"))
+      .join(y.select(col("__id").as("id_b"), col("__n").as("__nb"), col("__sh")), "__sh")
+      .where(col("id_a") < col("id_b"))
+      .groupBy("id_a", "id_b", "__na", "__nb")
+      .agg(count(lit(1)).as("shared")), threshold)
+
+  /** The banded generator: (id_a, id_b), id_a < id_b, for every pair of
+    * (__id, __sig) rows whose MinHash signatures agree on one band
+    * ([[bandKeys]]) — at most `bands` bucket rows per row, whatever the
+    * shingle document frequency.
+    */
+  private[graft] def bandCandidates(sigs: DataFrame, bands: Int,
+                                    rowsPerBand: Int): DataFrame = {
+    val banded = sigs.select(col("__id"), explode(expr(
+      bandKeys("__sig", bands, rowsPerBand))).as("__b"))
+      .select(col("__id"), col("__b.band"), col("__b.bh"))
+    banded.as("x").join(banded.as("y"), Seq("band", "bh"))
+      .where(col("x.__id") < col("y.__id"))
+      .select(col("x.__id").as("id_a"), col("y.__id").as("id_b"))
+      .distinct()
+  }
+
+  /** [[bandCandidates]] of a [[shingleSets]] table, signed by the
+    * codegen'd `minhash_set_signature`. Empty sets are dropped first:
+    * their signature is all nulls, which every empty set shares, so k of
+    * them would make k² candidates that can never verify.
+    */
+  private[graft] def setBandCandidates(sets: DataFrame, numHashes: Int,
+                                       bands: Int): DataFrame =
+    bandCandidates(sets.filter(col("__n") > 0).select(col("__id"),
+      minhash_set_signature(col("__shs"), numHashes).as("__sig")),
+      bands, numHashes / bands)
+
+  /** Join both sides' sorted sets onto (id_a, id_b) candidates and count
+    * the overlap: adds __sa, __na, __sb, __nb and shared (one
+    * array_intersect per DISTINCT candidate pair).
+    */
+  private[graft] def sharedCounts(cands: DataFrame, sets: DataFrame): DataFrame =
+    cands
+      .join(sets.select(col("__id").as("id_a"), col("__shs").as("__sa"),
+        col("__n").as("__na")), "id_a")
+      .join(sets.select(col("__id").as("id_b"), col("__shs").as("__sb"),
+        col("__n").as("__nb")), "id_b")
+      .withColumn("shared", size(array_intersect(col("__sa"), col("__sb"))).cast("long"))
+
+  /** The join-back verifier: (id_a, id_b, shared, jaccard) for the
+    * candidates whose sets reach [[jaccard]] >= `threshold`.
+    */
+  private[graft] def verifyPairs(cands: DataFrame, sets: DataFrame,
+                                 threshold: Double): DataFrame =
+    jaccardAtLeast(sharedCounts(cands, sets), threshold)
+
+  private def jaccardAtLeast(pairs: DataFrame, threshold: Double): DataFrame =
+    pairs.withColumn("jaccard", jaccard(col("shared"), col("__na"), col("__nb")))
+      .filter(col("jaccard") >= threshold)
+      .select("id_a", "id_b", "shared", "jaccard")
+
   /** Exact word-n-gram Jaccard similarity join: candidates from shared
     * shingles, verified with exact set overlap. Returns
     * (id_a, id_b, shared, jaccard) for pairs with jaccard >= threshold.
     */
   def jaccardJoin(df: DataFrame, id: Column, text: Column,
                   threshold: Double, n: Int = 3): DataFrame = {
-    // Same shape as the d03 operator: the per-row shingle count is
-    // computed narrowly before the explode and carried through the join
-    // (no separate sizes aggregation), and the signature table is
-    // persisted so both self-join sides read one cache. The leading
-    // spread parallelizes the shingle+hash stage (and the cache it
-    // builds) when the corpus arrives as one row group, and is GATED on
-    // scan parallelism (spreadNarrowScan) — a production many-file scan
-    // pays no exchange. This is also the artifact build's
-    // pair-generation path, so the cleaning run benefits too.
-    val shingled = spreadNarrowScan(df)
-      .select(id.as("__id"), split(text, " ").as("__w"))
-      .select(col("__id"), expr(
-        s"array_distinct(${wordGrams("__w", n, GramKey.XxHash64)})").as("__shs"))
-      // explode_outer, NOT explode (the m09 lesson, guide §7.2): explode
-      // lets InferFiltersFromGenerate add `size(__shs) > 0`, and pushdown
-      // re-runs the WHOLE per-gram xxhash64 transform as a scan-side
-      // Filter below the repartition — serial on a one-row-group corpus,
-      // then computed AGAIN above the exchange. Docs of >= n words (every
-      // doc in a shingle-eligible corpus) yield a non-empty array, so
-      // outer-explode output is row-identical; a shorter doc yields one
-      // null-gram row, which the null-rejecting equi-join below drops.
-      .select(col("__id"), size(col("__shs")).cast("long").as("__n"),
-        explode_outer(col("__shs")).as("__sh"))
-      .pipe(persistTracked)
-    val x = shingled.select(col("__id").as("id_a"), col("__n").as("__na"), col("__sh"))
-    val y = shingled.select(col("__id").as("id_b"), col("__n").as("__nb"), col("__sh"))
-    x.join(y, "__sh")
-      .where(col("id_a") < col("id_b"))
-      .groupBy("id_a", "id_b", "__na", "__nb")
-      .agg(count(lit(1)).as("shared"))
-      .withColumn("jaccard", jaccard(col("shared"), col("__na"), col("__nb")))
-      .filter(col("jaccard") >= threshold)
-      .select("id_a", "id_b", "shared", "jaccard")
+    // the postings table is persisted so both self-join sides read one
+    // cache; the gated spread parallelizes the shingle+hash stage (and
+    // the cache it builds) when the corpus arrives as one row group. This
+    // is also the artifact build's pair-generation path.
+    val shingled = postings(textGramSets(df, id, text, n)).pipe(persistTracked)
+    postingsPairs(shingled, shingled, threshold)
   }
 
   /** Exact-verified Jaccard pairs with MinHash-LSH banding candidates —
@@ -271,34 +357,26 @@ object GraftOps {
     * band-collision probability, NOT by shared-shingle document
     * frequency: on a heavily duplicated corpus the shared-shingle
     * self-join in [[jaccardJoin]] expands O(df²) per hot shingle, while
-    * banding emits <= `bands` bucket rows per doc regardless. A true
-    * pair at jaccard t is missed w.p. (1 - t^r)^b (r = numHashes/bands)
-    * — at the 16×4 default, ~1e-18 for t≈0.98 copies; tune bands up for
-    * recall closer to the threshold. Verification (exact set
-    * intersection over sorted hash arrays) touches candidates only, so
+    * banding emits <= `bands` bucket rows per doc regardless.
+    *
+    * Candidates and verification use different shingles. The candidates
+    * come from `minhash_signature`'s shingles (lowercased, split on
+    * `\s+`, a doc shorter than `n` words counted as one gram); the
+    * verified set is [[wordGramSet]] over the text split on ' '. The
+    * miss bound (1 - t^r)^b (r = numHashes/bands) is about a pair's
+    * Jaccard t over the FORMER shingles — at the 16×4 default ~1e-18
+    * for t≈0.98 copies; tune bands up for recall closer to the
+    * threshold. Where the two shingle sets agree (lowercase text of
+    * single-space-separated words, every doc at least `n` words),
     * output pairs match [[jaccardJoin]] exactly up to banding recall.
     */
   def jaccardJoinBanded(df: DataFrame, id: Column, text: Column,
                         threshold: Double, n: Int = 3,
-                        numHashes: Int = 64, bands: Int = 16): DataFrame = {
-    // shingle-set build parallelized for one-row-group corpora, gated on
-    // scan parallelism (see spreadNarrowScan); minhashCandidates spreads
-    // its own input
-    val sets = spreadNarrowScan(df)
-      .select(id.as("__id"), split(text, " ").as("__w"))
-      .select(col("__id"), expr(
-        s"array_sort(array_distinct(${wordGrams("__w", n, GramKey.XxHash64)}))").as("__shs"))
-      .withColumn("__n", size(col("__shs")).cast("long"))
-    minhashCandidates(df, id, text, numHashes, bands, n)
-      .join(sets.select(col("__id").as("id_a"), col("__shs").as("__sa"),
-        col("__n").as("__na")), "id_a")
-      .join(sets.select(col("__id").as("id_b"), col("__shs").as("__sb"),
-        col("__n").as("__nb")), "id_b")
-      .withColumn("shared", size(array_intersect(col("__sa"), col("__sb"))).cast("long"))
-      .withColumn("jaccard", jaccard(col("shared"), col("__na"), col("__nb")))
-      .filter(col("jaccard") >= threshold)
-      .select("id_a", "id_b", "shared", "jaccard")
-  }
+                        numHashes: Int = 64, bands: Int = 16): DataFrame =
+    // sets are read by the two join-backs only: unpersisted, the set
+    // build shares the spread exchange with minhashCandidates
+    verifyPairs(minhashCandidates(df, id, text, numHashes, bands, n),
+      textShingleSets(df, id, text, n), threshold)
 
   /** [[jaccardJoinBanded]] for a PRECOMPUTED 64-bit shingle-hash set
     * column — the banding escape hatch for non-text shingles (byte
@@ -315,43 +393,15 @@ object GraftOps {
   def jaccardJoinBandedSets(df: DataFrame, id: Column, shingles: Column,
                             threshold: Double, numHashes: Int = 64,
                             bands: Int = 16): DataFrame = {
-    val rowsPerBand = numHashes / bands
-    // Leading spread (m10's pattern, guide §2.5 input skew): the
-    // signature stage below is the CPU-bound heart of the verb —
+    // The set table's leading spread (m10's pattern, guide §2.5 input
+    // skew): the signature stage is the CPU-bound heart of the verb —
     // numHashes minhash folds over every shingle set — and a small
     // corpus arrives as ONE parquet row group = one task, serializing
     // it (and the cache it builds) on a single core. Measured on m09's
     // lsh route at sf0.1: two ~8.5 s single-task stages → sub-second
-    // across 32 cores. GATED on scan parallelism (spreadNarrowScan): on
-    // a many-file production corpus the scan is already parallel and no
-    // exchange is added.
-    val spread = spreadNarrowScan(df)
-    // sort_array, not array_sort: array_sort compares through an
-    // interpreted lambda; neither the signature nor the intersection
-    // size depends on element order
-    val sets = spread.select(id.as("__id"),
-        sort_array(array_distinct(shingles)).as("__shs"))
-      .withColumn("__n", size(col("__shs")).cast("long"))
-      .pipe(persistTracked)
-    val sigs = sets.select(col("__id"),
-      minhash_set_signature(col("__shs"), numHashes).as("__sig"))
-    val banded = sigs.select(col("__id"), explode(expr(
-      bandKeys("__sig", bands, rowsPerBand))).as("__b"))
-      .select(col("__id"), col("__b.band"), col("__b.bh"))
-    val cands = banded.as("x").join(banded.as("y"), Seq("band", "bh"))
-      .where(col("x.__id") < col("y.__id"))
-      .select(col("x.__id").as("id_a"), col("y.__id").as("id_b"))
-      .distinct()
-    cands
-      .join(sets.select(col("__id").as("id_a"), col("__shs").as("__sa"),
-        col("__n").as("__na")), "id_a")
-      .join(sets.select(col("__id").as("id_b"), col("__shs").as("__sb"),
-        col("__n").as("__nb")), "id_b")
-      .withColumn("shared",
-        size(array_intersect(col("__sa"), col("__sb"))).cast("long"))
-      .withColumn("jaccard", jaccard(col("shared"), col("__na"), col("__nb")))
-      .filter(col("jaccard") >= threshold)
-      .select("id_a", "id_b", "shared", "jaccard")
+    // across 32 cores. Persisted: signatures and both join-backs read it.
+    val sets = shingleSets(df, id, shingles).pipe(persistTracked)
+    verifyPairs(setBandCandidates(sets, numHashes, bands), sets, threshold)
   }
 
   /** Near-dup pair strategy dispatch: "shingle" = exact shared-shingle
@@ -1098,12 +1148,7 @@ object GraftOps {
     // recompute the single-task shingle transform (~0.9 s apiece at
     // sf0.1) before any cache block lands. The gated spread makes the
     // cache (and each racer) 32-task; production scans skip it.
-    val sets = spreadNarrowScan(df)
-      .select(id.as("__id"), split(text, " ").as("__w"))
-      .select(col("__id"), expr(
-        s"array_sort(array_distinct(${wordGrams("__w", n, GramKey.XxHash64)}))").as("__shs"))
-      .withColumn("__n", size(col("__shs")).cast("long"))
-      .pipe(persistTracked)
+    val sets = textShingleSets(df, id, text, n).pipe(persistTracked)
     val rows = sets.select(col("__id"), col("__n"), explode(col("__shs")).as("__tok"))
     val dfTbl = rows.groupBy("__tok").agg(count(lit(1)).as("__df"))
     // prefix of the (potentially) smaller side, rarest shingles first;
@@ -1140,16 +1185,12 @@ object GraftOps {
       // pair set is byte-light but CPU-dense, the same AQE-coalescing
       // exposure as the window above
       .repartition(df.sparkSession.sessionState.conf.numShufflePartitions)
-    cand
-      .join(sets.select(col("__id").as("id_a"), col("__shs").as("__sa"),
-        col("__n").as("n_a")), "id_a")
-      .join(sets.select(col("__id").as("id_b"), col("__shs").as("__sb"),
-        col("__n").as("n_b")), "id_b")
-      .withColumn("shared", size(array_intersect(col("__sa"), col("__sb"))).cast("long"))
-      .withColumn("cont_ab", col("shared").cast("double") / col("n_a"))
-      .withColumn("cont_ba", col("shared").cast("double") / col("n_b"))
+    sharedCounts(cand, sets)
+      .withColumn("cont_ab", col("shared").cast("double") / col("__na"))
+      .withColumn("cont_ba", col("shared").cast("double") / col("__nb"))
       .filter(col("cont_ab") >= threshold || col("cont_ba") >= threshold)
-      .select("id_a", "id_b", "shared", "n_a", "n_b", "cont_ab", "cont_ba")
+      .select(col("id_a"), col("id_b"), col("shared"), col("__na").as("n_a"),
+        col("__nb").as("n_b"), col("cont_ab"), col("cont_ba"))
   }
 
   /** Gopher-style rule-suite filter decision over any (id, text) frame:
@@ -1557,15 +1598,19 @@ object GraftOps {
       s.conf.get("graft.neardup.strategy", "shingle")
     else strategy
 
-  /** (id, n, sh) exploded word-3-gram signature index — the same
-    * expression family as [[jaccardJoin]]'s candidate table.
+  /** (id, n, sh) exploded word-3-gram signature index — [[jaccardJoin]]'s
+    * postings as a stored table. `explode`, not [[postings]]'
+    * explode_outer: a doc shorter than 3 words stores no null-gram row.
     */
   private def shingleSignatures(base: DataFrame): DataFrame =
     base.select(col("id"), split(col("__t"), " ").as("__w"))
-      .select(col("id"), expr(
-        s"array_distinct(${wordGrams("__w", 3, GramKey.XxHash64)})").as("__shs"))
+      .select(col("id"), wordGramSet("__w", 3).as("__shs"))
       .select(col("id"), size(col("__shs")).cast("long").as("n"),
         explode(col("__shs")).as("sh"))
+
+  /** A stored (id, n, sh) signature table as [[postingsPairs]] input. */
+  private def storedPostings(sigs: DataFrame): DataFrame =
+    sigs.select(col("id").as("__id"), col("n").as("__n"), col("sh").as("__sh"))
 
   /** Incremental artifact update — the production INGEST loop closed:
     * a cleaning run built the artifacts once ([[dedupArtifacts]]);
@@ -1614,16 +1659,8 @@ object GraftOps {
     // candidates: new×(old + new-so-far), one shingle-key equijoin; the
     // id_a < id_b orientation falls out of the ingest contract for the
     // old side and the inequality for the new×new side
-    val x = oldSigs.unionByName(newSigs)
-      .select(col("id").as("id_a"), col("n").as("na"), col("sh"))
-    val y = newSigs.select(col("id").as("id_b"), col("n").as("nb"), col("sh"))
-    val newPairs = x.join(y, "sh")
-      .where(col("id_a") < col("id_b"))
-      .groupBy("id_a", "id_b", "na", "nb")
-      .agg(count(lit(1)).as("shared"))
-      .withColumn("jaccard", jaccard(col("shared"), col("na"), col("nb")))
-      .filter(col("jaccard") >= threshold)
-      .select("id_a", "id_b", "shared", "jaccard")
+    val newPairs = postingsPairs(storedPostings(oldSigs.unionByName(newSigs)),
+        storedPostings(newSigs), threshold)
       .pipe(persistTracked)
     SnapshotTable.append(newPairs, s"$path/pairs")
     SnapshotTable.append(newSigs, s"$path/signatures")

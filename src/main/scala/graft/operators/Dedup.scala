@@ -4,7 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.Tables
 import graft.functions.{minhash_signature, simhash64}
-import graft.api.GraftOps.{GramKey, jaccard, persistTracked, wordGrams}
+import graft.api.GraftOps.persistTracked
 import scala.util.chaining._
 
 /** Training-data dedup family — SURVEY.md §2.
@@ -99,18 +99,14 @@ object Dedup {
   // The join key is xxhash64(shingle), not the shingle string: an 8-byte
   // shuffle key instead of ~20-byte strings (collision odds ~n^2/2^64 are
   // irrelevant at any feasible shingle count).
-  // The per-doc shingle count is computed NARROWLY (size of the distinct
-  // array, before the explode) and carried through the join, so the plan
-  // never re-shingles the corpus for a sizes table — na/nb ride the
-  // groupBy keys (functionally determined by da/db: cardinality
-  // unchanged, row just 16 bytes wider). The exploded signature table is
-  // persisted before the self-join: shingling runs ONCE, both join sides
-  // scan the cache (without the barrier Catalyst re-derives the shingle
-  // expression on each side, plus once more in each side's inferred
-  // size>0 filter — 4 full re-shinglings of the corpus). Persisting the
-  // signature table before the candidate join is also the 100 TB shape:
-  // it's the smallest thing worth materializing and every downstream
-  // stage reuses it.
+  // The plan is GraftOps.jaccardJoin: the per-doc shingle count rides
+  // the postings through the join (no sizes table), and the postings
+  // table is persisted before the self-join, so shingling runs ONCE and
+  // both join sides scan the cache (without the barrier Catalyst
+  // re-derives the shingle expression on each side). Persisting the
+  // postings before the candidate join is also the 100 TB shape: it's
+  // the smallest thing worth materializing and every downstream stage
+  // reuses it.
   /** Verified near-dup pairs (word-3-gram Jaccard >= 0.5), persisted.
     * This is THE reusable unit of the dedup family: clustering (d08),
     * keep-best (d13), and edit-distance verification (t09) all consume
@@ -122,9 +118,10 @@ object Dedup {
     *
     * Spark conf `graft.neardup.strategy` routes the candidate join for
     * the WHOLE family at once: "shingle" (default — the exact shared-
-    * shingle plan below) or "lsh" (d06's banded path, candidate volume
-    * bounded by collision probability — what a duplicated 100 TB corpus
-    * sets, and then d03/d08/d13/t09/d15/p01 all inherit it).
+    * shingle join, `GraftOps.jaccardJoin`) or "lsh" (d06's banded path,
+    * `GraftOps.jaccardJoinBanded`, candidate volume bounded by collision
+    * probability — what a duplicated 100 TB corpus sets, and then
+    * d03/d08/d13/t09/d15/p01 all inherit it).
     */
   def verifiedPairs(s: SparkSession, d: String): DataFrame = {
     // materialized-artifact route: a cleaning run wrote the pair table
@@ -134,28 +131,11 @@ object Dedup {
       return t.select(col("id_a").as("da"), col("id_b").as("db"),
         col("shared"), col("jaccard"))
     }
-    if (s.conf.get("graft.neardup.strategy", "shingle") == "lsh")
-      return graft.api.GraftOps
-        .jaccardJoinBanded(Tables.documents(s, d), col("doc_id"), col("text"), 0.5)
-        .select(col("id_a").as("da"), col("id_b").as("db"),
-          col("shared"), col("jaccard"))
-        .pipe(persistTracked)
-    val shingled = Tables.documents(s, d)
-      .select(col("doc_id"), split(col("text"), " ").as("words"))
-      .select(col("doc_id"), expr(
-        s"array_distinct(${wordGrams("words", 3, GramKey.XxHash64)})").as("shs"))
-      .select(col("doc_id"), size(col("shs")).cast("long").as("n"),
-        explode(col("shs")).as("sh"))
-      .pipe(persistTracked)
-    val x = shingled.select(col("doc_id").as("da"), col("n").as("na"), col("sh"))
-    val y = shingled.select(col("doc_id").as("db"), col("n").as("nb"), col("sh"))
-    x.join(y, "sh")
-      .where(col("da") < col("db"))
-      .groupBy("da", "db", "na", "nb")
-      .agg(count(lit(1)).as("shared"))
-      .withColumn("jaccard", jaccard(col("shared"), col("na"), col("nb")))
-      .filter(col("jaccard") >= 0.5)
-      .select("da", "db", "shared", "jaccard")
+    graft.api.GraftOps
+      .nearDupPairs(Tables.documents(s, d), col("doc_id"), col("text"), 0.5,
+        strategy = "session")
+      .select(col("id_a").as("da"), col("id_b").as("db"),
+        col("shared"), col("jaccard"))
       .pipe(persistTracked)
   }
 
@@ -222,6 +202,10 @@ object Dedup {
   // shared-shingle frequency), then exact shingle-set Jaccard verifies
   // just those pairs. Unlike d03, cost does not grow with stop-shingle
   // document frequency.
+  // The operator is a `GraftOps.jaccardJoinBanded` call: its
+  // minhash_signature candidates band on `bandKeys` (d02 keeps its own
+  // murmur3 band key, which its oracle replays), and the join-back
+  // verifier checks the word-3-gram sets of the candidates only.
   // Oracle: shares d03's SQL. At 16 bands x 4 rows a true pair at
   // jaccard t is missed with probability (1 - t^4)^16 — ~1e-18 at the
   // seeded t≈0.98 — so the verified output EQUALS the exact join's
@@ -229,29 +213,12 @@ object Dedup {
   // the spec still asserts recall and no-false-accepts independently,
   // so a corpus where banding actually lost a pair would fail the spec
   // before it failed the oracle.
-  val d06_lsh_verified: Q = (s, d) => {
-    val docs = Tables.documents(s, d)
-    val sig = docs.select(col("doc_id"), minhash_signature(col("text"), 64, 3).as("sig"))
-    val bands = sig.select(
-      col("doc_id"),
-      explode(expr("transform(sequence(0, 15), b -> hash(slice(sig, b*4+1, 4), b))")).as("bkey"))
-    val cand = bands.as("x").join(bands.as("y"), "bkey")
-      .where(col("x.doc_id") < col("y.doc_id"))
-      .select(col("x.doc_id").as("da"), col("y.doc_id").as("db"))
-      .distinct()
-    val shingleSets = docs
-      .select(col("doc_id"), split(col("text"), " ").as("words"))
-      .select(col("doc_id"), expr(
-        s"array_distinct(${wordGrams("words", 3, GramKey.XxHash64)})").as("shs"))
-    cand
-      .join(shingleSets.select(col("doc_id").as("da"), col("shs").as("sa")), "da")
-      .join(shingleSets.select(col("doc_id").as("db"), col("shs").as("sb")), "db")
-      .withColumn("shared", expr("CAST(size(array_intersect(sa, sb)) AS BIGINT)"))
-      .withColumn("jaccard", jaccard(col("shared"), expr("size(sa)"), expr("size(sb)")))
-      .filter(col("jaccard") >= 0.5)
-      .select("da", "db", "shared", "jaccard")
+  val d06_lsh_verified: Q = (s, d) =>
+    graft.api.GraftOps
+      .jaccardJoinBanded(Tables.documents(s, d), col("doc_id"), col("text"), 0.5)
+      .select(col("id_a").as("da"), col("id_b").as("db"),
+        col("shared"), col("jaccard"))
       .orderBy("da", "db")
-  }
 
   // ---- d07: KMV distinct sketch vs exact (native TypedImperativeAggregate) ----
   // The sketch hash is md5-prefix based, so DuckDB replicates the EXACT

@@ -3,7 +3,8 @@ package graft.operators
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.Tables
-import graft.api.GraftOps.{GramKey, jaccard, wordGrams}
+import graft.api.GraftOps.{GramKey, persistTracked, textShingleSets, verifyPairs, wordGrams}
+import scala.util.chaining._
 
 /** Dedup family, part 3: prefix-filtered exact similarity join — the
   * AllPairs/PPJoin candidate-pruning technique (Bayardo et al. 2007,
@@ -26,20 +27,6 @@ import graft.api.GraftOps.{GramKey, jaccard, wordGrams}
   */
 object Dedup3 {
   type Q = (SparkSession, String) => DataFrame
-
-  /** (doc_id, sh: sorted distinct 3-gram hashes, n = |sh|). r14: the
-    * r13 "spread A/B'd flat" note is superseded — StageProfile showed
-    * the un-spread cache's concurrent consumers racing materialization,
-    * each recomputing the single-task shingle pass (see
-    * GraftOps.containmentJoin); the gated spread parallelizes the cache
-    * build and every racer, and is a no-op on a parallel production scan.
-    */
-  private def shingleSets(docs: DataFrame): DataFrame =
-    graft.api.GraftOps.spreadNarrowScan(docs)
-      .select(col("doc_id"), split(col("text"), " ").as("words"))
-      .select(col("doc_id"), expr(
-        s"array_sort(array_distinct(${wordGrams("words", 3, GramKey.XxHash64)}))").as("sh"))
-      .withColumn("n", size(col("sh")))
 
   /** Exact Jaccard-verified pairs at `t`, PPJoin-pruned: columns
     * (da, db, shared, jaccard), unordered. Bit-identical to d03's pairs.
@@ -73,40 +60,38 @@ object Dedup3 {
     */
   def prefixJaccardPairsOf(docs: DataFrame, t: Double): DataFrame = {
     import org.apache.spark.sql.expressions.Window
-    val sets = shingleSets(docs)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val rows = sets.select(col("doc_id"), explode(col("sh")).as("tok"))
+    // (__id, __shs sorted distinct 3-gram hashes, __n): the gated spread
+    // parallelizes the set build and every concurrent reader of the
+    // cache on a one-row-group corpus (see GraftOps.containmentJoin)
+    val sets = textShingleSets(docs, col("doc_id"), col("text"), 3)
+      .pipe(persistTracked)
+    val rows = sets.select(col("__id"), explode(col("__shs")).as("tok"))
     val dfTbl = rows.groupBy("tok").agg(count(lit(1)).as("df"))
-    val byDoc = Window.partitionBy("doc_id")
+    val byDoc = Window.partitionBy("__id")
     // explicit repartition on the window key (r13 second pass, see
     // GraftOps.containmentJoin): same exchange the window requires, but
     // never AQE-coalesced — the 1–4 MiB shuffle otherwise collapses this
     // CPU-dense stage to 1–3 tasks on a small corpus
     val pref = rows.join(dfTbl, "tok")
       .repartition(docs.sparkSession.sessionState.conf.numShufflePartitions,
-        col("doc_id"))
+        col("__id"))
       .withColumn("rn", row_number().over(byDoc.orderBy("df", "tok")))
       .withColumn("n", count(lit(1)).over(byDoc))
       .filter(col("rn") <= col("n") - ceil(lit(t) * col("n")).cast("int") + 1)
-      .select("doc_id", "tok", "n")
+      .select("__id", "tok", "n")
     // length filter (lossless): J(a,b) >= t forces t*max(na,nb) <=
     // min(na,nb), so size-incompatible bucket pairs are dropped BEFORE
     // the distinct and the verification join-backs ever see them.
     val cands = pref.as("x").join(pref.as("y"), "tok")
-      .where(col("x.doc_id") < col("y.doc_id") &&
+      .where(col("x.__id") < col("y.__id") &&
         greatest(col("x.n"), col("y.n")) * t <= least(col("x.n"), col("y.n")))
-      .select(col("x.doc_id").as("da"), col("y.doc_id").as("db"))
+      .select(col("x.__id").as("id_a"), col("y.__id").as("id_b"))
       .distinct()
       // spread the per-pair array_intersect verification (same
       // AQE-coalescing exposure; see GraftOps.containmentJoin)
       .repartition(docs.sparkSession.sessionState.conf.numShufflePartitions)
-    cands
-      .join(sets.select(col("doc_id").as("da"), col("sh").as("sha"), col("n").as("na")), "da")
-      .join(sets.select(col("doc_id").as("db"), col("sh").as("shb"), col("n").as("nb")), "db")
-      .withColumn("shared", size(array_intersect(col("sha"), col("shb"))).cast("long"))
-      .withColumn("jaccard", jaccard(col("shared"), col("na"), col("nb")))
-      .filter(col("jaccard") >= t)
-      .select("da", "db", "shared", "jaccard")
+    verifyPairs(cands, sets, t)
+      .select(col("id_a").as("da"), col("id_b").as("db"), col("shared"), col("jaccard"))
   }
 
   // ---- d11: prefix-filtered exact near-dup join (d03 output, PPJoin plan) ----
@@ -146,7 +131,7 @@ object Dedup3 {
       .select(col("doc_id"), split(col("text"), " ").as("w"))
       .select(col("doc_id"), explode(expr(
         s"array_distinct(${wordGrams("w", 5, GramKey.Md5)})")).as("g"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      .pipe(persistTracked)
     // r13 (the t46 restructure, complement form): a doc's SHARED gram
     // count is n_grams − n_unique, and a df=1 gram's sole owner is
     // min(doc_id) of its posting — carried on the df aggregate for
@@ -246,7 +231,6 @@ object Dedup3 {
     }.getOrElse(d15Inline(s, d))
 
   private def d15Inline(s: SparkSession, d: String): DataFrame = {
-    import org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK
     val normExpr = "trim(regexp_replace(lower(text), '\\\\s+', ' '))"
     val docs = Tables.documents(s, d).select(col("doc_id"), col("text"))
     // Fan-out barriers carry IDS AND HASHES ONLY — the text column stays
@@ -258,7 +242,7 @@ object Dedup3 {
     val hashed = docs.select(col("doc_id"), md5(expr(normExpr)).as("h"))
     val keepers = hashed.groupBy("h").agg(min("doc_id").as("ref"))
     val withRef = hashed.join(keepers, "h").select("doc_id", "ref")
-      .persist(MEMORY_AND_DISK)
+      .pipe(persistTracked)
     val exactDups = withRef.filter(col("doc_id") =!= col("ref"))
       .select(col("doc_id"), lit("exact_dup").as("status"), col("ref").as("ref_doc"))
     val survivorIds = withRef.filter(col("doc_id") === col("ref")).select("doc_id")
@@ -271,7 +255,7 @@ object Dedup3 {
       .nearDupPairs(survivors, col("doc_id"), col("text"), 0.5,
         strategy = "session")
       .groupBy(col("id_b").as("doc_id")).agg(min("id_a").as("ref_doc"))
-      .persist(MEMORY_AND_DISK)
+      .pipe(persistTracked)
     val nearDups = doomedRef
       .select(col("doc_id"), lit("near_dup").as("status"), col("ref_doc"))
     val kept = survivorIds.join(doomedRef, Seq("doc_id"), "left_anti")

@@ -5,6 +5,8 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import graft.Tables
 import graft.functions.minhash_signature
+import graft.api.GraftOps.persistTracked
+import scala.util.chaining._
 
 /** Dedup, part 4: sub-document (span-level) dedup and signature-based
   * similarity estimation.
@@ -75,7 +77,7 @@ object Dedup4 {
     // same both-sides rule as d39: persist or the minhash scan runs 2x
     val sigs = Tables.documents(s, d)
       .select(col("doc_id"), minhash_signature(col("text"), 64, 3).as("sig"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      .pipe(persistTracked)
     val pairs = Dedup.d03_ngram_jaccard(s, d)
     pairs
       .join(sigs.withColumnRenamed("doc_id", "da").withColumnRenamed("sig", "sig_a"), "da")
@@ -279,7 +281,7 @@ object Dedup4 {
     // join — persist it or the corpus-scale minhash runs twice
     val sigs = Tables.documents(s, d)
       .select(col("doc_id"), minhash_signature(col("text"), 64, 3).as("sig"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      .pipe(persistTracked)
     val pairs = Dedup.d03_ngram_jaccard(s, d)
     def agree(mask: String) =
       expr(s"aggregate(zip_with(sig_a, sig_b, (x, y) -> " +

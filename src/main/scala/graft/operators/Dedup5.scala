@@ -3,7 +3,8 @@ package graft.operators
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.Tables
-import graft.api.GraftOps.{GramKey, jaccard, wordGrams}
+import graft.api.GraftOps.{GramKey, jaccard, persistTracked, wordGrams}
+import scala.util.chaining._
 
 /** Dedup family, part 5: weighted similarity. */
 object Dedup5 {
@@ -53,12 +54,12 @@ object Dedup5 {
       // null-rejecting equi-join downstream ever matches.
       .select(col("doc_id"), explode_outer(col("shs")).as("sh"))
       .select(col("doc_id"), unhex(md5(col("sh"))).as("k"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      .pipe(persistTracked)
     val weights = sh.groupBy("k").agg(count(lit(1)).as("df"))
       .crossJoin(broadcast(nDocs))
       .select(col("k"), col("df"), (col("n_docs") - col("df")).as("wt"))
     val tok = sh.join(weights, "k")
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      .pipe(persistTracked)
     val totals = tok.groupBy("doc_id").agg(sum("wt").as("totw"))
     val rare = tok.filter(col("df") <= 5).select(col("doc_id"), col("k"))
     val cand = rare.select(col("doc_id").as("id_a"), col("k"))
@@ -148,7 +149,7 @@ object Dedup5 {
       .select(col("doc_id"), split(col("text"), " ").as("words"))
       .select(col("doc_id"), explode(expr(
         s"array_distinct(${wordGrams("words", 3, GramKey.Text)})")).as("sh"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      .pipe(persistTracked)
     // 16 seeded minhashes, SQL-expressible: min over md5(seed || shingle).
     // Computed as ONE wide aggregate (16 min columns) instead of a 16x
     // row explode + (doc, seed) shuffle: the md5 count is identical but
@@ -599,7 +600,7 @@ object Dedup5 {
       // null-gram row, dropped by the null-rejecting self-join on sh.
       .select(col("doc_id"), size(col("shs")).cast("long").as("nsh"),
         explode_outer(col("shs")).as("sh"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      .pipe(persistTracked)
     val x = sh.select(col("doc_id").as("da"), col("nsh").as("na"), col("sh"))
     val y = sh.select(col("doc_id").as("db"), col("nsh").as("nb"), col("sh"))
     val pairs = x.join(y, "sh").where(col("da") < col("db"))
@@ -925,7 +926,7 @@ object Dedup5 {
       .select(col("doc_id"), split(col("text"), " ").as("words"))
       .select(col("doc_id"), explode(expr(
         s"array_distinct(${wordGrams("words", 3, GramKey.XxHash64)})")).as("sh"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      .pipe(persistTracked)
     val est = shingled.groupBy("sh").agg(count(lit(1)).as("df"))
       .agg(count(lit(1)).as("n_grams"),
         sum("df").as("n_postings"),

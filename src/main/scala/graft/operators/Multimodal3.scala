@@ -3,7 +3,7 @@ package graft.operators
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.Tables
-import graft.api.GraftOps.jaccard
+import graft.api.GraftOps.{persistTracked, postings, postingsPairs, spreadNarrowScan}
 import scala.util.chaining._
 
 /** Multimodal plumbing, part 3: content-addressed asset storage. */
@@ -167,38 +167,18 @@ object Multimodal3 {
       : DataFrame = {
     // leading spread (m10's pattern): the byte-gram hash stage is the
     // CPU-bound pass and a one-row-group corpus serializes it on a
-    // single core otherwise; gated on scan parallelism
-    // (GraftOps.spreadNarrowScan) — a parallel real scan pays no exchange
-    // explode_outer, NOT explode (r13, guide §7.2 plan audit): explode
-    // makes InferFiltersFromGenerate add `size(shs) > 0`, and predicate
-    // pushdown drags that below the repartition — the WHOLE per-gram
-    // xxhash64 pass re-runs as a scan-side Filter on ONE task (the
-    // one-row-group floor), then again above the exchange (StageProfile:
-    // a 2.2 s single-task stage on a query that otherwise runs ~2 s).
-    // The gram array is never empty (a payload shorter than the gram is
-    // one gram), so outer-explode output is row-identical.
-    val shingled = graft.api.GraftOps.spreadNarrowScan(assets)
-      .select(col("doc_id"), gramExpr.as("shs"))
-      .select(col("doc_id"), size(col("shs")).cast("long").as("n"),
-        explode_outer(col("shs")).as("sh"))
-      .pipe(graft.api.GraftOps.persistTracked)
-    // r13 second pass: n rides THROUGH the join (jaccardJoin's shape)
-    // instead of joining a sizes table back after the pair aggregate —
-    // StageProfile showed the two sizes passes re-scanning the whole
-    // postings cache for ~1 s each while the pair join is a broadcast
-    // (n costs 8 bytes/row in the broadcast build, nothing on the
-    // unshuffled probe side); 3 postings-cache scans → 1, two
-    // doc-keyed join-backs gone.
-    val x = shingled.select(col("doc_id").as("id_a"), col("n").as("na"), col("sh"))
-    val y = shingled.select(col("doc_id").as("id_b"), col("n").as("nb"), col("sh"))
-    x.join(y, "sh")
-      .where(col("id_a") < col("id_b"))
-      .groupBy("id_a", "id_b", "na", "nb")
-      .agg(count(lit(1)).as("shared"))
-      .withColumn("jaccard", jaccard(col("shared"), col("na"), col("nb")))
-      .filter(col("jaccard") >= 0.3)
-      .select("id_a", "id_b", "shared", "jaccard")
-      .orderBy("id_a", "id_b")
+    // single core otherwise; gated on scan parallelism — a parallel real
+    // scan pays no exchange. The postings explode_outer (r13, guide §7.2
+    // plan audit) keeps InferFiltersFromGenerate from re-running the
+    // whole per-gram hash pass as a scan-side Filter on ONE task; the
+    // gram array is never empty (a payload shorter than the gram is one
+    // gram), so outer-explode output is row-identical. r13 second pass:
+    // n rides THROUGH the join instead of a sizes table joined back
+    // after the pair aggregate — 3 postings-cache scans → 1.
+    val shingled = postings(spreadNarrowScan(assets)
+        .select(col("doc_id").as("__id"), gramExpr.as("__shs")))
+      .pipe(persistTracked)
+    postingsPairs(shingled, shingled, 0.3).orderBy("id_a", "id_b")
   }
   // byte-aligned stride 2 over the hex string = byte 16-grams
   val m09Sql: String =

@@ -1,9 +1,9 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
-import graft.api.GraftOps.{GramKey, bandKeys, wordGrams}
+import graft.api.GraftOps.{bandKeys, wordGramSet}
 
 /** Structured Streaming variants of the event-analytics operators.
   *
@@ -543,6 +543,43 @@ object StreamOps {
       .start()
   }
 
+  /** The pair checks both streaming near-dup verbs run inside a band
+    * bucket, and the set they verify.
+    */
+  private object BandMatch {
+    /** The batch text route's set (`GraftOps.jaccardJoinBanded`): sorted
+      * distinct xxhash64 word 3-grams of the array column `words`.
+      */
+    def verifiedSet(words: String): Column = sort_array(wordGramSet(words, 3))
+
+    /** The first band (of `bands` bands of `r` slots) on which the two
+      * signatures agree, or -1: a pair colliding in several bands is
+      * emitted by this one only, as batch's `distinct` does.
+      */
+    def firstCollidingBand(a: Array[Long], b: Array[Long], bands: Int, r: Int): Int = {
+      def bandEq(band: Int): Boolean = {
+        var i = band * r
+        val end = (band + 1) * r
+        while (i < end) { if (a(i) != b(i)) return false; i += 1 }
+        true
+      }
+      var band = 0
+      while (band < bands) { if (bandEq(band)) return band; band += 1 }
+      -1
+    }
+
+    /** |a ∩ b| of two sorted distinct arrays, in one merge pass. */
+    def sharedCount(a: Array[Long], b: Array[Long]): Long = {
+      var (i, j, n) = (0, 0, 0L)
+      while (i < a.length && j < b.length) {
+        if (a(i) == b(j)) { n += 1; i += 1; j += 1 }
+        else if (a(i) < b(j)) i += 1
+        else j += 1
+      }
+      n
+    }
+  }
+
   case class BandMember(band: Int, bh: Long, doc_id: Long,
                         sig: Array[Long], shs: Array[Long])
   case class NearDupPair(id_a: Long, id_b: Long, shared: Long,
@@ -589,34 +626,13 @@ object StreamOps {
     val banded = spark.readStream.schema(graft.Tables.schemas("documents")).parquet(s"$dir/documents*")
       .select(col("doc_id"),
         graft.functions.minhash_signature(col("text"), numHashes, 3).as("sig"),
-        expr(s"array_sort(array_distinct(${wordGrams("split(text, ' ')", 3, GramKey.XxHash64)}))")
-          .as("shs"))
+        split(col("text"), " ").as("__w"))
+      .select(col("doc_id"), col("sig"), BandMatch.verifiedSet("__w").as("shs"))
       .select(explode(expr(bandKeys("sig", bands, r))).as("bk"),
         col("doc_id"), col("sig"), col("shs"))
       .select(col("bk.band").as("band"), col("bk.bh").as("bh"),
         col("doc_id"), col("sig"), col("shs"))
       .as[BandMember]
-
-    def bandEq(a: Array[Long], b: Array[Long], band: Int): Boolean = {
-      var i = band * r
-      val end = (band + 1) * r
-      while (i < end) { if (a(i) != b(i)) return false; i += 1 }
-      true
-    }
-    def firstCollidingBand(a: Array[Long], b: Array[Long]): Int = {
-      var band = 0
-      while (band < bands) { if (bandEq(a, b, band)) return band; band += 1 }
-      -1
-    }
-    def sharedCount(a: Array[Long], b: Array[Long]): Long = {
-      var (i, j, n) = (0, 0, 0L)
-      while (i < a.length && j < b.length) {
-        if (a(i) == b(j)) { n += 1; i += 1; j += 1 }
-        else if (a(i) < b(j)) i += 1
-        else j += 1
-      }
-      n
-    }
 
     banded
       .groupByKey(m => (m.band, m.bh))
@@ -631,9 +647,9 @@ object StreamOps {
           fresh.foreach { nw =>
             seen.foreach { m =>
               if (m.doc_id != nw.doc_id
-                  && firstCollidingBand(m.sig, nw.sig) == key._1) {
+                  && BandMatch.firstCollidingBand(m.sig, nw.sig, bands, r) == key._1) {
                 val (a, b) = if (m.doc_id < nw.doc_id) (m, nw) else (nw, m)
-                val shared = sharedCount(a.shs, b.shs)
+                val shared = BandMatch.sharedCount(a.shs, b.shs)
                 val union = a.shs.length.toLong + b.shs.length - shared
                 val jac = shared.toDouble / union
                 if (jac >= threshold)
@@ -683,35 +699,15 @@ object StreamOps {
       .select(col(idCol).as("doc_id"),
         graft.functions.minhash_signature(col(textCol), numHashes, 3)
           .as("sig"),
-        expr(s"array_sort(array_distinct(${wordGrams(s"split(`$textCol`, ' ')", 3, GramKey.XxHash64)}))")
-          .as("shs"),
-        col(tsCol).as("ts"))
+        split(col(textCol), " ").as("__w"), col(tsCol).as("ts"))
+      .select(col("doc_id"), col("sig"), BandMatch.verifiedSet("__w").as("shs"),
+        col("ts"))
       .select(explode(expr(bandKeys("sig", bands, r))).as("bk"),
         col("doc_id"), col("sig"), col("shs"), col("ts"))
       .select(col("bk.band").as("band"), col("bk.bh").as("bh"),
         col("doc_id"), col("sig"), col("shs"), col("ts"))
       .as[BandMemberT]
 
-    def bandEq(a: Array[Long], b: Array[Long], band: Int): Boolean = {
-      var i = band * r
-      val end = (band + 1) * r
-      while (i < end) { if (a(i) != b(i)) return false; i += 1 }
-      true
-    }
-    def firstCollidingBand(a: Array[Long], b: Array[Long]): Int = {
-      var band = 0
-      while (band < bands) { if (bandEq(a, b, band)) return band; band += 1 }
-      -1
-    }
-    def sharedCount(a: Array[Long], b: Array[Long]): Long = {
-      var (i, j, n) = (0, 0, 0L)
-      while (i < a.length && j < b.length) {
-        if (a(i) == b(j)) { n += 1; i += 1; j += 1 }
-        else if (a(i) < b(j)) i += 1
-        else j += 1
-      }
-      n
-    }
     // re-arm the group's wake-up at the EARLIEST member expiry (must
     // land strictly past the current watermark per the state contract)
     def rearm(state: GroupState[List[BandMemberT]],
@@ -745,10 +741,10 @@ object StreamOps {
               seen.foreach { m =>
                 if (m.doc_id != nw.doc_id
                     && math.abs(nw.ms - m.ms) <= horizonMillis
-                    && firstCollidingBand(m.sig, nw.sig) == key._1) {
+                    && BandMatch.firstCollidingBand(m.sig, nw.sig, bands, r) == key._1) {
                   val (a, b) =
                     if (m.doc_id < nw.doc_id) (m, nw) else (nw, m)
-                  val shared = sharedCount(a.shs, b.shs)
+                  val shared = BandMatch.sharedCount(a.shs, b.shs)
                   val union = a.shs.length.toLong + b.shs.length - shared
                   val jac = shared.toDouble / union
                   if (jac >= threshold)

@@ -122,6 +122,25 @@ class DedupSimilaritySpec extends AnyFunSuite {
       s"caches left after releaseCaches: ${persisted -- before}")
   }
 
+  test("the dedup family's persisting operators leave no cache behind after releaseCaches") {
+    def persisted = spark.sparkContext.getPersistentRDDs.keySet
+    spark.catalog.clearCache()
+    val ops = Seq(
+      "d11" -> operators.Dedup3.d11_prefix_join, "d12" -> operators.Dedup3.d12_crossdoc_ngrams,
+      "d15" -> operators.Dedup3.d15_dedup_manifest, "d19" -> operators.Dedup4.d19_minhash_estimate,
+      "d23" -> operators.Dedup5.d23_weighted_jaccard, "d24" -> operators.Dedup5.d24_lsh_recall,
+      "d31" -> operators.Dedup5.d31_estimator_calibration,
+      "d37" -> operators.Dedup5.d37_pairjoin_cost_model, "d39" -> operators.Dedup4.d39_bbit_minhash)
+    for ((name, op) <- ops) {
+      val before = persisted
+      op(spark, sf).collect()
+      assert((persisted -- before).nonEmpty, s"$name cached nothing")
+      api.GraftOps.releaseCaches()
+      assert((persisted -- before).isEmpty,
+        s"$name left caches after releaseCaches: ${persisted -- before}")
+    }
+  }
+
   test("d06 lsh-verified pairs: jaccard values exact, recall >= 0.9 vs d03") {
     val exact = operators.Dedup.d03_ngram_jaccard(spark, sf)
       .collect().map(r => (r.getLong(0), r.getLong(1)) -> r.getDouble(3)).toMap

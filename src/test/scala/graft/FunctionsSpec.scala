@@ -129,21 +129,23 @@ class FunctionsSpec extends AnyFunSuite {
       "an empty or null set has no minimum: every slot is null")
   }
 
-  test("m09's lsh plan runs no higher-order function over the shingle set") {
-    import org.apache.spark.sql.catalyst.expressions.{ArraySort, ArrayTransform, Expression}
+  // every expression of the plan, including those of the cached
+  // relations it reads (an InMemoryRelation keeps its adaptive
+  // physical plan as an inner child)
+  private def exprs(node: org.apache.spark.sql.catalyst.plans.QueryPlan[_])
+      : Seq[org.apache.spark.sql.catalyst.expressions.Expression] = {
     import org.apache.spark.sql.catalyst.plans.QueryPlan
     import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
-    // every expression of the plan, including those of the cached
-    // relations it reads (an InMemoryRelation keeps its adaptive
-    // physical plan as an inner child)
-    def exprs(node: QueryPlan[_]): Seq[Expression] = {
-      val inner = node match {
-        case a: AdaptiveSparkPlanExec => Seq(a.executedPlan)
-        case _ => node.children ++ node.innerChildren
-      }
-      node.expressions.flatMap(_.collect { case e => e }) ++
-        inner.collect { case q: QueryPlan[_] => q }.flatMap(exprs)
+    val inner = node match {
+      case a: AdaptiveSparkPlanExec => Seq(a.executedPlan)
+      case _ => node.children ++ node.innerChildren
     }
+    node.expressions.flatMap(_.collect { case e => e }) ++
+      inner.collect { case q: QueryPlan[_] => q }.flatMap(exprs)
+  }
+
+  test("m09's lsh plan runs no higher-order function over the shingle set") {
+    import org.apache.spark.sql.catalyst.expressions.{ArraySort, ArrayTransform}
     spark.conf.set("graft.neardup.strategy", "lsh")
     try {
       val plan = operators.Multimodal3.m09_asset_neardup(spark, sf)
@@ -162,6 +164,21 @@ class FunctionsSpec extends AnyFunSuite {
       spark.conf.unset("graft.neardup.strategy")
       api.GraftOps.releaseCaches()
     }
+  }
+
+  test("the near-dup set builds sort with sort_array: no ArraySort in d06, d11, containmentJoin or jaccardJoinBanded") {
+    import org.apache.spark.sql.catalyst.expressions.{ArraySort, SortArray}
+    val docs = Tables.documents(spark, sf)
+    val plans = Seq(
+      "d06" -> operators.Dedup.d06_lsh_verified(spark, sf),
+      "d11" -> operators.Dedup3.d11_prefix_join(spark, sf),
+      "containmentJoin" -> api.GraftOps.containmentJoin(docs, col("doc_id"), col("text"), 0.5),
+      "jaccardJoinBanded" -> api.GraftOps.jaccardJoinBanded(docs, col("doc_id"), col("text"), 0.5))
+    try plans.foreach { case (name, df) =>
+      val all = exprs(df.queryExecution.optimizedPlan)
+      assert(!all.exists(_.isInstanceOf[ArraySort]), s"array_sort in $name's plan")
+      assert(all.exists(_.isInstanceOf[SortArray]), s"no sorted set in $name's plan")
+    } finally api.GraftOps.releaseCaches()
   }
 
   test("cosine_sim in SQL matches Column API") {

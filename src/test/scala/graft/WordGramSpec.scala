@@ -101,6 +101,16 @@ class WordGramSpec extends AnyFunSuite {
       val pairs = GraftOps.jaccardJoinBandedSets(sets, col("id"), col("sh"), 0.5)
         .select("id_a", "id_b").collect().map(r => (r.getLong(0), r.getLong(1)))
       assert(pairs.toSeq == Seq((3L, 4L)), s"empty sets paired: ${pairs.toSeq}")
+      // an empty set's signature is all nulls, one band key for every
+      // empty set: the band join must not pair them (k empty sets would
+      // make k² candidates that can never verify)
+      val manyEmpty = sets.filter(col("id") > 2).unionByName(
+        (1L to 200L).map(i => (-i, Seq.empty[Long])).toDF("id", "sh"))
+      val cands = GraftOps.setBandCandidates(
+          GraftOps.shingleSets(manyEmpty, col("id"), col("sh")), 64, 16)
+        .collect().map(r => (r.getLong(0), r.getLong(1)))
+      assert(cands.toSeq == Seq((3L, 4L)),
+        s"${cands.length} band candidates over 200 empty sets and one twin pair")
     }
     GraftOps.releaseCaches()
   }
@@ -118,11 +128,19 @@ class WordGramSpec extends AnyFunSuite {
       lines.zipWithIndex.collect { case (l, i) if l.contains(pat) => s"$f:${i + 1}" }
     }
     val emitter = "src/main/scala/graft/api/GraftOps.scala"
-    for (pat <- windows :+ bandKey) {
+    def outside(found: Seq[String]) = found.filterNot(_.startsWith(emitter + ":"))
+    for (pat <- windows :+ bandKey :+ "Seq(\"band\", \"bh\")") {
       val found = hits(pat)
-      assert(found.forall(_.startsWith(emitter + ":")),
-        s"'$pat' outside GraftOps: ${found.filterNot(_.startsWith(emitter + ":"))}")
+      assert(outside(found).isEmpty, s"'$pat' outside GraftOps: ${outside(found)}")
       assert(found.size <= 1, s"'$pat' appears more than once: $found")
     }
+    // set verification (the join-back verifier) lives in GraftOps only
+    val intersect = hits("array_intersect(")
+    assert(outside(intersect).isEmpty, s"array_intersect outside GraftOps: ${outside(intersect)}")
+    // d02's murmur3 band key is replayed by its oracle and stays; no
+    // other pipeline bands on it
+    val d02Key = hits("hash(slice(sig")
+    assert(d02Key.size == 1 && d02Key.head.startsWith("src/main/scala/graft/operators/Dedup.scala:"),
+      s"d02's band key copied: $d02Key")
   }
 }
